@@ -33,7 +33,8 @@ object Coreset {
     * was the q162/q137 fixed-cost root cause: each greedy round's
     * action re-walked genCode over a few-hundred-node tree and
     * re-compiled it in janino, ~2.5 s of driver time PER JOB at
-    * dim=64 (MmrDriftProbe, round 15).
+    * dim=64 (BASELINE.md, "Round 15: the correctness-gate rescue,
+    * deck30, and the drift post-mortem").
     */
   private def sqDist(spark: org.apache.spark.sql.SparkSession,
       vecCol: Column, center: Array[Double]): Column =

@@ -354,7 +354,8 @@ object GraphOps {
     // was tried first — column pruning re-projects the RA-term-free
     // side, exchanges stop canonicalizing equal, it bought nothing;
     // the array mine measured −47% on the q224 shape, equality
-    // asserted, TickProfile q224b). Neighbor lists are duplicate-free
+    // asserted; BASELINE.md, "Post-close addendum 2: q224 wedge mine
+    // self-join → adjacency arrays"). Neighbor lists are duplicate-free
     // (ed is distinct + oriented) so sorted i<j enumeration equals the
     // __ua < __ub filter exactly — array_sort and `<` share Spark's
     // ordering for longs and strings alike. The self-join's `kept`

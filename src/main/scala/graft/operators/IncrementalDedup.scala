@@ -457,11 +457,15 @@ object IncrementalDedup {
     // hot over old ∪ delta = persisted hot ∪ newly-hot: DF only grows
     // on append, so no old hot shingle ever cools — and the union's
     // size is the SUM of the disjoint parts (counted concurrently at
-    // tick open), not a third count job
-    val hotAll = hotOld.unionByName(newlyHot).persist(storage)
+    // tick open), not a third count job. NOT persisted: its parts are
+    // a small parquet scan and an already-counted cache, while a cache
+    // of the union is first read by overlapped consumers — whichever
+    // plans before the other's job built it schedules its own cache
+    // job, so the tick's job count varied run to run
+    val hotAll = hotOld.unionByName(newlyHot)
     val nHotAll = nHotOld + nNewlyHot
     // outDir/hot is only read by the NEXT tick — the write overlaps
-    // everything below (hotB reads the in-memory persisted frame)
+    // everything below
     val hotWriteF = Overlap.future {
       hotAll.write.mode("overwrite").parquet(s"$outDir/hot")
     }
@@ -737,7 +741,6 @@ object IncrementalDedup {
     shDelta.unpersist(false)
     deltaCounts.unpersist(false)
     newlyHot.unpersist(false)
-    hotAll.unpersist(false)
     restrict.unpersist(false)
     minedM.unpersist(false)
     dropped.unpersist(false)

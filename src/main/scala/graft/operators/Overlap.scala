@@ -5,6 +5,8 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.sql.SparkSession
+
 /** Shared Future-overlap discipline for materializing INDEPENDENT
   * Spark job graphs concurrently (guide §2.6 "overlap independent
   * jobs": actions are only sequential because driver code calls them
@@ -15,13 +17,12 @@ import scala.concurrent.duration.Duration
   * nested overlap (a tick overlapping writes inside an operator that
   * is itself overlapped by its caller).
   *
-  * Caveat (documented, acceptable for the call sites here): Spark's
-  * thread-local job properties (job group, scheduler pool,
-  * description) are inherited when a pool THREAD is created, not per
-  * task — a reused worker thread keeps the properties of whichever
-  * submitter created it. Jobs submitted through here may therefore
-  * attribute to a stale job group in listener output; none of the
-  * overlapped actions below rely on job-group cancellation.
+  * Spark inherits a thread's job properties only when the thread is
+  * CREATED, and pool threads are reused, so each body runs under the
+  * submitter's job group, description, scheduler pool,
+  * interrupt-on-cancel flag and job tags, captured at submission.
+  * `spark.sql.execution.id` is never carried over: the body's own
+  * actions open their own SQL executions.
   */
 private[graft] object Overlap {
   private val pool = ExecutionContext.fromExecutorService(
@@ -31,7 +32,25 @@ private[graft] object Overlap {
       t
     }))
 
-  def future[A](body: => A): Future[A] = Future(body)(pool)
+  private val jobProperties = Seq("spark.jobGroup.id",
+    "spark.job.description", "spark.scheduler.pool",
+    "spark.job.interruptOnCancel", "spark.job.tags")
+
+  def future[A](body: => A): Future[A] = {
+    // null values clear keys the submitter leaves unset, so a reused
+    // thread never keeps a stale group from an earlier submitter
+    val captured = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map { s =>
+        val sc = s.sparkContext
+        sc -> jobProperties.map(k => k -> sc.getLocalProperty(k))
+      }
+    Future {
+      captured.foreach { case (sc, props) =>
+        props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      }
+      body
+    }(pool)
+  }
 
   def await[A](f: Future[A]): A = Await.result(f, Duration.Inf)
 }

@@ -177,7 +177,7 @@ object Similarity {
     if (small) broadcastAllPairsCosine(emb, idCol, vecCol, threshold)
     else {
       // the routed arm TRAINS its cells when the caller supplies none
-      // (r17 RecallBench, planted-cluster fixture): untrained
+      // (BASELINE.md, "Routed-arm recall on clusterable data"): untrained
       // smallest-id centroids recalled only 0.12–0.17 of planted
       // mid-cosine structure at θ=0.4–0.6, while 5-round Lloyd
       // centroids recalled 0.86–0.96 — k-means locality is what

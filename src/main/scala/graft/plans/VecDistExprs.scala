@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, NullType}
   * fixed-size expressions generate a tight primitive loop instead:
   * same arithmetic, same left-to-right summation order (bit-identical
   * to the chains, so every 6dp-rounded oracle hash is unchanged), and
-  * the per-job codegen cost drops ~20× (MmrDriftProbe A/B). At corpus
+  * the per-job codegen cost drops ~20× (BASELINE.md, "Round 15: the
+  * correctness-gate rescue, deck30, and the drift post-mortem"). At corpus
   * scale the loop also beats interpreted HOFs (`aggregate(zip_with)`)
   * — per-element lambda dispatch with boxing — which is why this is an
   * Expression and not a `functions._` composition.

@@ -1,12 +1,43 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Base64
 
 import scala.jdk.CollectionConverters._
 
 import graft.streaming.RawMessage
+
+/** Message codec shared by the durable [[FileBroker]] (one file per
+  * message) and the [[SocketBroker]] wire protocol (one frame per
+  * message): base64 fields, one per line, fixed order — no JSON
+  * library dependency, arbitrary topic names and binary payloads
+  * safe.
+  */
+private[sources] object RawMessageCodec {
+  import DurableFiles.{dec, decProps, enc, encProps}
+
+  def serialize(m: RawMessage): Array[Byte] = {
+    val b64 = Base64.getEncoder
+    Seq(
+      enc(m.tenant), enc(m.namespace), enc(m.topic), m.partition.toString,
+      m.ledgerId.toString, m.entryId.toString,
+      b64.encodeToString(m.value),
+      if (m.key == null) "-" else "k" + enc(m.key),
+      m.eventTimeMillis.toString, m.publishTimeMillis.toString,
+      encProps(m.properties)
+    ).mkString("\n").getBytes(UTF_8)
+  }
+
+  def deserialize(bytes: Array[Byte]): RawMessage = {
+    val f = new String(bytes, UTF_8).split("\n", -1)
+    RawMessage(dec(f(0)), dec(f(1)), dec(f(2)), f(3).toInt,
+      f(4).toLong, f(5).toLong,
+      Base64.getDecoder.decode(f(6)),
+      if (f(7) == "-") null else dec(f(7).substring(1)),
+      f(8).toLong, f(9).toLong, decProps(f(10)))
+  }
+}
 
 /** Durable file-backed transport: one file per message under
   * `root/<topic-b64url>__<partition>/<ledgerId>-<entryId>`, written
@@ -31,52 +62,11 @@ import graft.streaming.RawMessage
   *
   * Local[*] scope like the registry itself: executors resolve the
   * broker by name from [[EnvelopeBrokerRegistry]] and share the
-  * filesystem. Message encoding is line-oriented base64 fields —
-  * no JSON library dependency, arbitrary topic names and binary
-  * payloads safe.
+  * filesystem. Messages are [[RawMessageCodec]] bytes; names and
+  * creates follow [[DurableFiles]].
   */
-/** Message codec shared by the durable [[FileBroker]] (one file per
-  * message) and the [[SocketBroker]] wire protocol (one frame per
-  * message): base64 fields, one per line, fixed order — no JSON
-  * library dependency, arbitrary topic names and binary payloads
-  * safe.
-  */
-private[sources] object RawMessageCodec {
-  private def enc(s: String): String =
-    Base64.getUrlEncoder.withoutPadding.encodeToString(s.getBytes(UTF_8))
-  private def dec(s: String): String =
-    new String(Base64.getUrlDecoder.decode(s), UTF_8)
-
-  def serialize(m: RawMessage): Array[Byte] = {
-    val b64 = Base64.getEncoder
-    val props = m.properties.toSeq.sortBy(_._1)
-      .map { case (k, v) => enc(k) + ":" + enc(v) }.mkString(",")
-    Seq(
-      enc(m.tenant), enc(m.namespace), enc(m.topic), m.partition.toString,
-      m.ledgerId.toString, m.entryId.toString,
-      b64.encodeToString(m.value),
-      if (m.key == null) "-" else "k" + enc(m.key),
-      m.eventTimeMillis.toString, m.publishTimeMillis.toString,
-      props
-    ).mkString("\n").getBytes(UTF_8)
-  }
-
-  def deserialize(bytes: Array[Byte]): RawMessage = {
-    val f = new String(bytes, UTF_8).split("\n", -1)
-    RawMessage(dec(f(0)), dec(f(1)), dec(f(2)), f(3).toInt,
-      f(4).toLong, f(5).toLong,
-      Base64.getDecoder.decode(f(6)),
-      if (f(7) == "-") null else dec(f(7).substring(1)),
-      f(8).toLong, f(9).toLong,
-      if (f(10).isEmpty) Map.empty
-      else f(10).split(",").map { kv =>
-        val Array(k, v) = kv.split(":", 2)
-        dec(k) -> dec(v)
-      }.toMap)
-  }
-}
-
 class FileBroker(rootDir: String) extends EnvelopeBroker with WritableEnvelopeBroker {
+  import DurableFiles.{dec, enc}
 
   private val root: Path = {
     val p = Paths.get(rootDir)
@@ -84,45 +74,14 @@ class FileBroker(rootDir: String) extends EnvelopeBroker with WritableEnvelopeBr
     p
   }
 
-  private def enc(s: String): String =
-    Base64.getUrlEncoder.withoutPadding.encodeToString(s.getBytes(UTF_8))
-  private def dec(s: String): String =
-    new String(Base64.getUrlDecoder.decode(s), UTF_8)
-
   private def partDir(topic: String, partition: Int): Path =
     root.resolve(s"${enc(topic)}__$partition")
-
-  private def serialize(m: RawMessage): Array[Byte] =
-    RawMessageCodec.serialize(m)
-  private def deserialize(bytes: Array[Byte]): RawMessage =
-    RawMessageCodec.deserialize(bytes)
 
   override def append(m: RawMessage): Unit = {
     val dir = partDir(m.topic, m.partition)
     Files.createDirectories(dir)
-    val target = dir.resolve(s"${m.ledgerId}-${m.entryId}")
-    if (!Files.exists(target)) {
-      val tmp = Files.createTempFile(dir, ".w", ".tmp")
-      try {
-        Files.write(tmp, serialize(m))
-        // atomic AND non-replacing: link(2) fails with EEXIST when the
-        // target exists, so the FIRST append wins even under a race —
-        // Files.move(ATOMIC_MOVE) maps to rename(2) on POSIX, which
-        // silently REPLACES an existing target and would let a
-        // replayed epoch overwrite a committed (possibly already-read)
-        // row. Readers never see partials either way: the name appears
-        // only fully written.
-        try Files.createLink(target, tmp)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException => ()
-          case _: UnsupportedOperationException =>
-            // no hard links (exotic FS): fall back to the weaker
-            // rename, non-replacing only without concurrent writers
-            try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: java.nio.file.FileAlreadyExistsException => () }
-        }
-      } finally Files.deleteIfExists(tmp)
-    }
+    DurableFiles.createFile(dir, s"${m.ledgerId}-${m.entryId}",
+      RawMessageCodec.serialize(m))
   }
 
   // Files.list streams hold a directory fd until closed — a broker
@@ -167,7 +126,8 @@ class FileBroker(rootDir: String) extends EnvelopeBroker with WritableEnvelopeBr
     listPositions(topic, partition).iterator
       .filter(p => ord.lteq(from, p) && ord.lt(p, until))
       .map { case (l, e) =>
-        deserialize(Files.readAllBytes(partDir(topic, partition).resolve(s"$l-$e")))
+        RawMessageCodec.deserialize(
+          Files.readAllBytes(partDir(topic, partition).resolve(s"$l-$e")))
       }
   }
 

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.io.{DataInputStream, DataOutputStream, EOFException, IOException}
 import java.net.{InetAddress, ServerSocket, Socket}
-import java.nio.charset.StandardCharsets.UTF_8
-import java.util.Base64
 
 import graft.streaming.RawMessage
 
@@ -38,10 +36,7 @@ import graft.streaming.RawMessage
   */
 object SocketBroker {
 
-  private def encTopic(s: String): String =
-    Base64.getUrlEncoder.withoutPadding.encodeToString(s.getBytes(UTF_8))
-  private def decTopic(s: String): String =
-    new String(Base64.getUrlDecoder.decode(s), UTF_8)
+  import DurableFiles.{dec, enc}
 
   /** Serve `backend` on `port` (0 = ephemeral). Thread-per-connection:
     * the TCK's racing appenders each hold their own connection, and a
@@ -91,10 +86,10 @@ object SocketBroker {
             val tps = backend.topicPartitions
             out.writeInt(tps.size)
             tps.foreach { case (t, p) =>
-              out.writeUTF(encTopic(t)); out.writeInt(p)
+              out.writeUTF(enc(t)); out.writeInt(p)
             }
           case "READ" =>
-            val it = backend.read(decTopic(parts(1)), parts(2).toInt,
+            val it = backend.read(dec(parts(1)), parts(2).toInt,
               (parts(3).toLong, parts(4).toLong),
               (parts(5).toLong, parts(6).toLong))
             // frame-at-a-time: each write blocks on the socket buffer,
@@ -107,10 +102,10 @@ object SocketBroker {
             }
             out.writeInt(-1)
           case "LATEST" =>
-            val (l, e) = backend.latest(decTopic(parts(1)), parts(2).toInt)
+            val (l, e) = backend.latest(dec(parts(1)), parts(2).toInt)
             out.writeLong(l); out.writeLong(e)
           case "ADVANCE" =>
-            val ((l, e), n) = backend.advance(decTopic(parts(1)),
+            val ((l, e), n) = backend.advance(dec(parts(1)),
               parts(2).toInt, (parts(3).toLong, parts(4).toLong),
               (parts(5).toLong, parts(6).toLong), parts(7).toLong)
             out.writeLong(l); out.writeLong(e); out.writeLong(n)
@@ -202,14 +197,14 @@ object SocketBroker {
       try {
         out.writeUTF("TOPICS"); out.flush()
         val n = in.readInt()
-        (0 until n).map(_ => (decTopic(in.readUTF()), in.readInt()))
+        (0 until n).map(_ => (dec(in.readUTF()), in.readInt()))
       } finally sock.close()
     }
 
     override def read(topic: String, partition: Int,
         from: (Long, Long), until: (Long, Long)): Iterator[RawMessage] = {
       val (sock, in, out) = connect()
-      out.writeUTF(s"READ ${encTopic(topic)} $partition " +
+      out.writeUTF(s"READ ${enc(topic)} $partition " +
         s"${from._1} ${from._2} ${until._1} ${until._2}")
       out.flush()
       // lazy frame iterator: the socket stays open while the caller
@@ -258,7 +253,7 @@ object SocketBroker {
     override def latest(topic: String, partition: Int): (Long, Long) = {
       val (sock, in, out) = connect()
       try {
-        out.writeUTF(s"LATEST ${encTopic(topic)} $partition"); out.flush()
+        out.writeUTF(s"LATEST ${enc(topic)} $partition"); out.flush()
         (in.readLong(), in.readLong())
       } finally sock.close()
     }
@@ -268,7 +263,7 @@ object SocketBroker {
         n: Long): ((Long, Long), Long) = {
       val (sock, in, out) = connect()
       try {
-        out.writeUTF(s"ADVANCE ${encTopic(topic)} $partition " +
+        out.writeUTF(s"ADVANCE ${enc(topic)} $partition " +
           s"${from._1} ${from._2} ${until._1} ${until._2} $n")
         out.flush()
         ((in.readLong(), in.readLong()), in.readLong())

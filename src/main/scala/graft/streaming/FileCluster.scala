@@ -2,13 +2,13 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
-import java.util.Base64
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.{EnvelopeBrokerRegistry, FileBroker}
+import graft.sources.DurableFiles.{createFile, dec, decProps, enc, encProps}
 
 /** Durable file-backed cluster — the deployable offline backend for
   * [[graft.SyncMain]], playing BOTH roles of the reference's two
@@ -30,9 +30,10 @@ import graft.sources.{EnvelopeBrokerRegistry, FileBroker}
   *   assignments/<b64(topic)>__<part>/<l>-<e>   dstLedger\ndstEntry
   * }}}
   *
-  * Every create is ATOMIC and NON-REPLACING (the FileBroker hardlink
-  * discipline) — conflict-as-success, the reference's swallowed
-  * `ConflictException` (`PulsarTenantSyncManager.java:79`) — so
+  * Every create is ATOMIC and NON-REPLACING
+  * ([[graft.sources.DurableFiles.createFile]]) — conflict-as-success,
+  * the reference's swallowed `ConflictException`
+  * (`PulsarTenantSyncManager.java:79`) — so
   * re-ticks, concurrent tickers, and replayed epochs are all no-ops.
   * Metadata listings are driver-side directory scans (metadata-sized
   * by contract, guarded by `SyncConfig.maxMetadataRows` downstream);
@@ -118,26 +119,27 @@ class FileCluster(
 
   override def createTenants(rows: Seq[TenantRow]): Unit =
     rows.foreach(r => createFile(dir("tenants"), enc(r.tenant),
-      r.allowedClusters.map(enc).mkString(",")))
+      r.allowedClusters.map(enc).mkString(",").getBytes(UTF_8)))
 
   override def createNamespaces(rows: Seq[NamespaceRow]): Unit =
     rows.foreach(r => createFile(dir("namespaces"),
-      s"${enc(r.tenant)}__${enc(r.namespace)}", r.policiesJson))
+      s"${enc(r.tenant)}__${enc(r.namespace)}", r.policiesJson.getBytes(UTF_8)))
 
   override def createTopics(rows: Seq[TopicRow]): Unit =
     rows.foreach(r => createFile(dir("topics"),
       s"${enc(r.tenant)}__${enc(r.namespace)}__${enc(r.topic)}",
-      s"${r.partitioned}\n${r.partitions}\n${encProps(r.properties)}"))
+      s"${r.partitioned}\n${r.partitions}\n${encProps(r.properties)}"
+        .getBytes(UTF_8)))
 
   override def createPartitions(rows: Seq[PartitionRow]): Unit =
     rows.foreach(r => createFile(dir("partitions"),
       s"${enc(r.tenant)}__${enc(r.namespace)}__${enc(r.topic)}__${r.partitionIndex}",
-      r.physicalTopic))
+      r.physicalTopic.getBytes(UTF_8)))
 
   override def createSchemas(rows: Seq[SchemaRow]): Unit =
     rows.foreach(r => createFile(dir("schemas"),
       s"${enc(r.tenant)}__${enc(r.namespace)}__${enc(r.topic)}__${r.version}",
-      s"${r.schemaType}\n${r.schemaJson}"))
+      s"${r.schemaType}\n${r.schemaJson}".getBytes(UTF_8)))
 
   override def sink: DestinationSink = FileClusterSink(root.toString)
 
@@ -198,23 +200,8 @@ class FileCluster(
 }
 
 object FileCluster {
-  private[streaming] def enc(s: String): String =
-    Base64.getUrlEncoder.withoutPadding.encodeToString(s.getBytes(UTF_8))
-  private[streaming] def dec(s: String): String =
-    new String(Base64.getUrlDecoder.decode(s), UTF_8)
-
   private def splitCsv(s: String): Seq[String] =
     if (s.isEmpty) Seq.empty else s.split(",", -1).toSeq
-
-  private[streaming] def encProps(m: Map[String, String]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) => enc(k) + ":" + enc(v) }
-      .mkString(",")
-  private[streaming] def decProps(s: String): Map[String, String] =
-    if (s.isEmpty) Map.empty
-    else s.split(",", -1).map { kv =>
-      val Array(k, v) = kv.split(":", 2)
-      dec(k) -> dec(v)
-    }.toMap
 
   /** (fileName, body) pairs under `d`, name-sorted for deterministic
     * frames; in-flight temp files (dot-prefixed) skipped.
@@ -229,29 +216,6 @@ object FileCluster {
         finally s.close()
       names.map(n => n -> new String(Files.readAllBytes(d.resolve(n)), UTF_8))
     }
-
-  /** Atomic, non-replacing create — first write wins, conflicts are
-    * success (the FileBroker link discipline shared by every metadata
-    * level).
-    */
-  private[streaming] def createFile(d: Path, name: String,
-      body: String): Unit = {
-    val target = d.resolve(name)
-    if (!Files.exists(target)) {
-      val tmp = Files.createTempFile(d, ".w", ".tmp")
-      try {
-        Files.write(tmp, body.getBytes(UTF_8))
-        try Files.createLink(target, tmp)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException => ()
-          case _: UnsupportedOperationException =>
-            try Files.move(tmp, target,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: java.nio.file.FileAlreadyExistsException => () }
-        }
-      } finally Files.deleteIfExists(tmp)
-    }
-  }
 }
 
 /** Executor-side publisher into a [[FileCluster]]'s broker. MessageId
@@ -288,7 +252,7 @@ case class FileClusterSink(rootDir: String) extends DestinationSink {
           .count(p => !p.getFileName.toString.startsWith("."))
         finally s.close()
         createFile(aDir, aFile.getFileName.toString,
-          s"${1000L + msg.partition}\n$n")
+          s"${1000L + msg.partition}\n$n".getBytes(UTF_8))
         readAssignment(aFile) // re-read: a lost race returns the winner
       }
     broker.append(RawMessage(
@@ -323,7 +287,7 @@ case class FileOffsetRecorder(rootDir: String) extends OffsetRecorder {
     val pDir = dir.resolve(s"${enc(m.topic)}__${m.partition}")
     Files.createDirectories(pDir)
     createFile(pDir, s"${m.srcLedger}-${m.srcEntry}",
-      s"${m.dstLedger}\n${m.dstEntry}\n${m.recordedTs.getTime}")
+      s"${m.dstLedger}\n${m.dstEntry}\n${m.recordedTs.getTime}".getBytes(UTF_8))
   }
 
   def mappings: Seq[OffsetMapping] = {

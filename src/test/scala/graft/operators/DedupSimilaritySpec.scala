@@ -201,8 +201,8 @@ class DedupSimilaritySpec extends SparkSuiteBase {
       s"planted fixture produced only ${exactPlanted.size} exact pairs")
     // the ROUTER's scale arm (forced by the zero byte budget) TRAINS
     // its cells and finds the bulk of the planted structure
-    // (RecallBench deck measurement: trained 0.86–0.96 vs untrained
-    // 0.12–0.17 — BASELINE round 17; floor set safely under)
+    // (BASELINE.md, "Routed-arm recall on clusterable data": trained
+    // 0.86–0.96 vs untrained 0.12–0.17; floor set safely under)
     val routed = pairs(Similarity.allPairsCosine(
       emb, "vec_id", "embedding", 0.4, maxBroadcastBytes = 0L))
     val hit = exactPlanted.count(routed.contains)

@@ -395,28 +395,19 @@ class IncrementalDedupSpec extends SparkSuiteBase {
     IncrementalDedup.buildIndex(old, "doc_id", "text", "lang",
       n = 3, threshold = 0.8, maxShingleDocFreq = 1000, dir = s"$dir/base")
 
-    def tickJobs(out: String): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      // settle any stragglers from previous actions before counting
-      Thread.sleep(300)
-      spark.sparkContext.addSparkListener(listener)
-      try {
+    // each tick runs under its own job group and counts only that
+    // group's jobs (overlapped work carries the group through Overlap),
+    // after a listener-bus drain — a straggler job from an earlier
+    // action or another thread can never shift the count
+    def tickJobs(out: String, group: String): Int =
+      graft.TinyAppendBench.timed(spark.sparkContext, group) {
         IncrementalDedup.append(delta, "doc_id", "text", "lang",
             s"$dir/base", out).labels
           .write.format("noop").mode("overwrite").save()
-        Thread.sleep(500) // listener bus is async; let it drain
-      } finally spark.sparkContext.removeSparkListener(listener)
-      counter.get
-    }
+      }.jobs.size
 
-    val first = tickJobs(s"$dir/out1")
-    val second = tickJobs(s"$dir/out2")
+    val first = tickJobs(s"$dir/out1", "incdedup-jobcount-1")
+    val second = tickJobs(s"$dir/out2", "incdedup-jobcount-2")
     assert(first == second,
       s"tick job count is nondeterministic: $first vs $second")
     // pinned at the r18 close (post barrier-collapse): measured value
