@@ -33,11 +33,12 @@ private[graft] object DurableFiles {
   /** Atomic, non-replacing create of `d/name`: the first write wins
     * and a conflict is success, so replays and racing writers are
     * no-ops. `d` must exist; `body` is built only when `d/name` does
-    * not exist yet.
+    * not exist yet. True when this call created the file, false when
+    * it existed already or a racing writer created it first.
     */
-  def createFile(d: Path, name: String, body: => Array[Byte]): Unit = {
+  def createFile(d: Path, name: String, body: => Array[Byte]): Boolean = {
     val target = d.resolve(name)
-    if (!Files.exists(target)) {
+    !Files.exists(target) && {
       val tmp = Files.createTempFile(d, ".w", ".tmp")
       try {
         Files.write(tmp, body)
@@ -48,14 +49,14 @@ private[graft] object DurableFiles {
         // replayed epoch overwrite a committed (possibly already-read)
         // file. Readers never see partials either way: the name
         // appears only fully written (dot-prefixed temps are skipped).
-        try Files.createLink(target, tmp)
+        try { Files.createLink(target, tmp); true }
         catch {
-          case _: FileAlreadyExistsException => ()
+          case _: FileAlreadyExistsException => false
           case _: UnsupportedOperationException =>
             // no hard links (exotic FS): fall back to the weaker
             // rename, non-replacing only without concurrent writers
-            try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: FileAlreadyExistsException => () }
+            try { Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE); true }
+            catch { case _: FileAlreadyExistsException => false }
         }
       } finally Files.deleteIfExists(tmp)
     }

@@ -4,9 +4,10 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -35,6 +36,16 @@ import graft.streaming.RawMessage
   * micro-batch offsets/ranges, InternalRow encoding — is real and
   * exercised end-to-end (EnvelopeSourceSpec, incl. driving
   * [[graft.streaming.MessageMirror]] from this source).
+  *
+  * LAYOUT CONTRACT: every scan, batch or micro-batch, plans exactly
+  * one input partition per (topic, partition), and its reader emits
+  * that partition's rows in (ledgerId, entryId) order — so each Spark
+  * partition holds one (topic, partition), in source order. The scan
+  * does not report this layout to the planner (Spark 4.1 plans
+  * streaming scans without a reported partitioning or ordering), so a
+  * consumer that relies on it recognises the stream by type with
+  * [[EnvelopeSource.isEnvelopeStream]]. The mirror does, to publish
+  * each source partition in the task that reads it, with no shuffle.
   *
   * Usage:
   * {{{
@@ -69,6 +80,24 @@ class EnvelopeSource extends TableProvider with DataSourceRegister {
 object EnvelopeSource {
   /** The wire schema is exactly [[RawMessage]] (FIXTURES.md §A.1). */
   val schema: StructType = Encoders.product[RawMessage].schema
+
+  /** The row encoder, derived by Scala reflection once per JVM rather
+    * than per reader or writer. Serializers and deserializers are not
+    * thread-safe: each reader and writer takes its own from it.
+    */
+  private[sources] lazy val encoder: ExpressionEncoder[RawMessage] =
+    ExpressionEncoder[RawMessage]().resolveAndBind()
+
+  /** True when `df` is exactly an envelope stream (a `readStream` of
+    * this source, untransformed), whose every micro-batch therefore
+    * keeps the layout contract. The check is on the relation's type:
+    * the batch's plan does not show the layout.
+    */
+  private[graft] def isEnvelopeStream(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case r: StreamingRelationV2 => r.table.isInstanceOf[EnvelopeTable]
+      case _ => false
+    }
 }
 
 /** Read-side transport: what a live connector implements over the
@@ -320,11 +349,26 @@ private[sources] class EnvelopeMicroBatchStream(
   override def getDefaultReadLimit: ReadLimit =
     maxRecordsPerMicroBatch.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
 
-  override def reportLatestOffset(): Offset = latestOffset()
+  // the live positions the last `latestOffset(start, limit)` listed:
+  // Spark asks for them right after that call, and a second listing
+  // of every partition would only repeat it
+  @volatile private var lastLive: Offset = _
+
+  override def reportLatestOffset(): Offset = lastLive
 
   override def latestOffset(startOffset: Offset, limit: ReadLimit): Offset = {
     val start = startOffset.asInstanceOf[EnvelopeOffset].positions
     val ord = Ordering[(Long, Long)]
+    // the partition universe is the live listing UNION the
+    // checkpointed start's keys: checkpointed positions must never
+    // drop out of the offset map just because the broker listing
+    // momentarily misses the partition
+    val allTps = {
+      val listed = broker.topicPartitions
+      listed ++ start.keys.filterNot(listed.toSet).toSeq.sorted
+    }
+    val live = allTps.map(tp => tp -> broker.latest(tp._1, tp._2)).toMap
+    lastLive = EnvelopeOffset(live)
     // per-partition end: broker latest, clamped to the AvailableNow
     // capture (partitions discovered after the capture wait for the
     // next run), and NEVER below the checkpointed start — a partition
@@ -333,20 +377,11 @@ private[sources] class EnvelopeMicroBatchStream(
     // the floor its checkpointed position would be overwritten and a
     // reappearing partition would silently replay its full history.
     def endFor(t: String, p: Int, s: (Long, Long)): (Long, Long) = {
-      val live = broker.latest(t, p)
       val capped = availableNowEnd match {
-        case Some(cap) => ord.min(live, cap.getOrElse((t, p), s))
-        case None => live
+        case Some(cap) => ord.min(live((t, p)), cap.getOrElse((t, p), s))
+        case None => live((t, p))
       }
       ord.max(capped, s)
-    }
-    // the partition universe is the live listing UNION the
-    // checkpointed start's keys: checkpointed positions must never
-    // drop out of the offset map just because the broker listing
-    // momentarily misses the partition
-    val allTps = {
-      val live = broker.topicPartitions
-      live ++ start.keys.filterNot(live.toSet).toSeq.sorted
     }
     limit match {
       case mr: ReadMaxRows =>
@@ -449,8 +484,7 @@ private[sources] case class EnvelopeWriterFactory(brokerName: String)
 
 private[sources] class EnvelopeDataWriter(brokerName: String)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  private val deserializer =
-    ExpressionEncoder[RawMessage]().resolveAndBind().createDeserializer()
+  private val deserializer = EnvelopeSource.encoder.createDeserializer()
   private val broker = EnvelopeBrokerRegistry.get(brokerName) match {
     case w: WritableEnvelopeBroker => w
     case other => throw new IllegalArgumentException(
@@ -479,8 +513,7 @@ private[sources] case class EnvelopeReaderFactory(required: StructType)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[EnvelopeInputPartition]
     new PartitionReader[InternalRow] {
-      private val serializer =
-        ExpressionEncoder[RawMessage]().createSerializer()
+      private val serializer = EnvelopeSource.encoder.createSerializer()
       // project the full envelope row down to the pruned schema with a
       // codegen'd UnsafeProjection over bound field references
       private val full = EnvelopeSource.schema

@@ -203,19 +203,21 @@ object FileCluster {
   private def splitCsv(s: String): Seq[String] =
     if (s.isEmpty) Seq.empty else s.split(",", -1).toSeq
 
-  /** (fileName, body) pairs under `d`, name-sorted for deterministic
-    * frames; in-flight temp files (dot-prefixed) skipped.
+  /** File names under `d`, sorted for deterministic frames; in-flight
+    * temp files (dot-prefixed) skipped.
     */
-  private[streaming] def listFiles(d: Path): Seq[(String, String)] =
+  private[streaming] def listNames(d: Path): Seq[String] =
     if (!Files.isDirectory(d)) Seq.empty
     else {
       val s = Files.list(d)
-      val names =
-        try s.iterator().asScala.map(_.getFileName.toString)
-          .filterNot(_.startsWith(".")).toList.sorted
-        finally s.close()
-      names.map(n => n -> new String(Files.readAllBytes(d.resolve(n)), UTF_8))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")).toList.sorted
+      finally s.close()
     }
+
+  /** (fileName, body) pairs of [[listNames]]. */
+  private[streaming] def listFiles(d: Path): Seq[(String, String)] =
+    listNames(d).map(n => n -> new String(Files.readAllBytes(d.resolve(n)), UTF_8))
 }
 
 /** Executor-side publisher into a [[FileCluster]]'s broker. MessageId
@@ -228,6 +230,20 @@ object FileCluster {
   * local[*] — executors share the filesystem, like the broker
   * registry itself; a multi-host deployment swaps in a live transport
   * binding (see EnvelopeSource's TCK contract).
+  *
+  * The next dst entry of a partition is the count of its committed
+  * assignments. An instance lists a partition's assignments once, on
+  * its first publish there, and then counts up, so a publish costs
+  * O(1) files touched, not O(history). The mirror publishes each
+  * (topic, partition) serially from one task, and every task
+  * deserializes its own instance. Two attempts of one task can still
+  * run at once (a speculative copy, or a killed task still running
+  * when the query restarts); they publish the same messages in the
+  * same order, and a create that finds the entry already assigned
+  * moves the counter past the winner's dst entry, so the two stay in
+  * step. Writers of different messages to one partition at once (a
+  * zombie task of an earlier batch overlapping the next one) can
+  * still assign one dst entry twice: count-then-create is not atomic.
   */
 case class FileClusterSink(rootDir: String) extends DestinationSink {
   import FileCluster._
@@ -235,25 +251,28 @@ case class FileClusterSink(rootDir: String) extends DestinationSink {
   @transient private lazy val root = Paths.get(rootDir)
   @transient private lazy val broker = new FileBroker(
     root.resolve("messages").toString)
+  // (topic, partition) → (assignment dir, next dst entry)
+  @transient private lazy val next =
+    scala.collection.mutable.HashMap.empty[(String, Int), (Path, Long)]
 
   override def publish(msg: PulsarMessage): (Long, Long) = {
-    val aDir = root.resolve("assignments")
-      .resolve(s"${enc(msg.topic)}__${msg.partition}")
-    Files.createDirectories(aDir)
-    val aFile = aDir.resolve(s"${msg.ledgerId}-${msg.entryId}")
+    val (aDir, n) = next.getOrElseUpdate((msg.topic, msg.partition), {
+      val d = root.resolve("assignments")
+        .resolve(s"${enc(msg.topic)}__${msg.partition}")
+      Files.createDirectories(d)
+      (d, listNames(d).size.toLong)
+    })
+    val name = s"${msg.ledgerId}-${msg.entryId}"
     val assigned: (Long, Long) =
-      if (Files.exists(aFile)) readAssignment(aFile)
-      else {
-        // next dst entry = count of committed assignments in this
-        // partition (monotonic; partition-serial by the mirror's
-        // repartition discipline, so no same-partition race)
-        val s = Files.list(aDir)
-        val n = try s.iterator().asScala
-          .count(p => !p.getFileName.toString.startsWith("."))
-        finally s.close()
-        createFile(aDir, aFile.getFileName.toString,
-          s"${1000L + msg.partition}\n$n".getBytes(UTF_8))
-        readAssignment(aFile) // re-read: a lost race returns the winner
+      if (createFile(aDir, name, s"${1000L + msg.partition}\n$n".getBytes(UTF_8))) {
+        next((msg.topic, msg.partition)) = (aDir, n + 1)
+        (1000L + msg.partition, n)
+      } else {
+        // a replay, or a lost race: the winner's assignment, and a
+        // racing attempt ahead of this one moves the counter on
+        val won = readAssignment(aDir.resolve(name))
+        next((msg.topic, msg.partition)) = (aDir, math.max(n, won._2 + 1))
+        won
       }
     broker.append(RawMessage(
       msg.tenant, msg.namespace, msg.topic, msg.partition,

@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+
+import graft.sources.EnvelopeSource
 
 /** Data-plane message mirror (SURVEY §2A A14, §3.2): consume the
   * source stream, apply the envelope projection, and write to the
@@ -34,11 +36,20 @@ object MessageMirror {
       timestamp_millis(col("publishTimeMillis")).as("publishTime"),
       col("properties"))
 
+  private val DefaultPublishAttempts = 3
+
   /** Start the mirror: projection → foreachBatch into `sink`.
-    * Per-partition ordering (the reference's single
-    * consumer+producer per partition) is preserved by sorting each
-    * micro-batch on (topic, partition, ledgerId, entryId) before the
-    * partition-serial write.
+    * Per-partition ordering (the reference's single consumer+producer
+    * per partition) needs each micro-batch laid out as one task per
+    * (topic, partition), in (ledgerId, entryId) order within it.
+    *
+    * An envelope stream ([[EnvelopeSource.isEnvelopeStream]]) is
+    * already laid out so by its source's layout contract, so each
+    * source partition is read, published and offset-recorded in the
+    * task that reads it: one stage and one job per trigger, no
+    * shuffle. Any other stream (a MemoryStream, a file source, a
+    * transformed envelope stream) goes through [[writeBatch]]'s
+    * exchange and sort.
     */
   def start(
       raw: DataFrame,
@@ -46,18 +57,20 @@ object MessageMirror {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       deadLetter: Option[DeadLetterSink] = None,
-      offsets: Option[OffsetRecorder] = None): DataStreamWriter[org.apache.spark.sql.Row] = {
+      offsets: Option[OffsetRecorder] = None): DataStreamWriter[Row] = {
+    val laidOut = EnvelopeSource.isEnvelopeStream(raw)
     project(raw).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        writeBatch(batch, sink, deadLetter, offsets)
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
+        if (laidOut) publish(batch, sink, deadLetter, offsets, DefaultPublishAttempts)
+        else writeBatch(batch, sink, deadLetter, offsets)
       }
   }
 
-  /** The sink body, usable directly in tests: repartition by
-    * (topic, partition) so each physical partition is written by one
-    * task, in (ledgerId, entryId) order within it.
+  /** The sink body for any input: repartition `batch` by (topic,
+    * partition) so each physical partition is written by one task, in
+    * (ledgerId, entryId) order within it, then publish.
     *
     * Error isolation (SURVEY §2A A23): a publish is retried
     * `publishAttempts` times (transient-failure absorption — the
@@ -76,62 +89,72 @@ object MessageMirror {
     * and the replay re-publishes idempotently and re-records.
     */
   def writeBatch(
-      batch: Dataset[org.apache.spark.sql.Row],
+      batch: Dataset[Row],
       sink: DestinationSink,
       deadLetter: Option[DeadLetterSink] = None,
       offsets: Option[OffsetRecorder] = None,
-      publishAttempts: Int = 3): Unit = {
-    batch
-      .repartition(col("topic"), col("partition"))
-      .sortWithinPartitions(col("topic"), col("partition"),
-        col("ledgerId"), col("entryId"))
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        rows.foreach { r =>
-          val published: Option[(Long, Long)] =
-            try Some(publishWithRetry(r, sink, publishAttempts))
-            catch {
-              // a task kill (speculation, stage retry, query stop) is
-              // NOT a sink failure: fail the task so the batch replays,
-              // never dead-letter on it. Spark kills via interrupt OR
-              // TaskKilledException (a RuntimeException — without its
-              // own case a killed task would record spurious DLQ
-              // entries for messages the retried task then delivers).
-              case e: InterruptedException => throw e
-              case e: org.apache.spark.TaskKilledException => throw e
-              case e: Exception => deadLetter match {
-                case Some(dl) =>
-                  dl.record(
-                    r.getAs[String]("topic"), r.getAs[Int]("partition"),
-                    r.getAs[Long]("ledgerId"), r.getAs[Long]("entryId"),
-                    e.getMessage)
-                  None
-                case None => throw e // no DLQ → fail the batch, replay
-              }
+      publishAttempts: Int = DefaultPublishAttempts): Unit =
+    publish(
+      batch.repartition(col("topic"), col("partition"))
+        .sortWithinPartitions(col("topic"), col("partition"),
+          col("ledgerId"), col("entryId")),
+      sink, deadLetter, offsets, publishAttempts)
+
+  /** The one publish loop: every task publishes its rows in the order
+    * it reads them.
+    */
+  private def publish(
+      laidOut: Dataset[Row],
+      sink: DestinationSink,
+      deadLetter: Option[DeadLetterSink],
+      offsets: Option[OffsetRecorder],
+      publishAttempts: Int): Unit =
+    laidOut.foreachPartition { rows: Iterator[Row] =>
+      rows.foreach { r =>
+        val published: Option[(Long, Long)] =
+          try Some(publishWithRetry(r, sink, publishAttempts))
+          catch {
+            // a task kill (speculation, stage retry, query stop) is
+            // NOT a sink failure: fail the task so the batch replays,
+            // never dead-letter on it. Spark kills via interrupt OR
+            // TaskKilledException (a RuntimeException — without its
+            // own case a killed task would record spurious DLQ
+            // entries for messages the retried task then delivers).
+            case e: InterruptedException => throw e
+            case e: org.apache.spark.TaskKilledException => throw e
+            case e: Exception => deadLetter match {
+              case Some(dl) =>
+                dl.record(
+                  r.getAs[String]("topic"), r.getAs[Int]("partition"),
+                  r.getAs[Long]("ledgerId"), r.getAs[Long]("entryId"),
+                  e.getMessage)
+                None
+              case None => throw e // no DLQ → fail the batch, replay
             }
-          published.foreach { case (dstLedger, dstEntry) =>
-            // A15: record src->dst translation on publish success;
-            // recordedTs = publishTime keeps replays deterministic
-            // (the reference stamps wall-clock nanoTime). Own
-            // try-scope: see class doc.
-            try offsets.foreach(_.record(OffsetMapping(
-              r.getAs[String]("topic"), r.getAs[Int]("partition"),
-              r.getAs[Long]("ledgerId"), r.getAs[Long]("entryId"),
-              dstLedger, dstEntry,
-              r.getAs[java.sql.Timestamp]("publishTime"))))
-            catch {
-              case e: Exception => throw new IllegalStateException(
-                "offset recorder failed after successful publish of " +
-                  s"${r.getAs[String]("topic")}/${r.getAs[Int]("partition")}" +
-                  s"@(${r.getAs[Long]("ledgerId")},${r.getAs[Long]("entryId")})" +
-                  " — failing the batch for replay", e)
-            }
+          }
+        published.foreach { case (dstLedger, dstEntry) =>
+          // A15: record src->dst translation on publish success;
+          // recordedTs = publishTime keeps replays deterministic
+          // (the reference stamps wall-clock nanoTime). Own
+          // try-scope: see writeBatch's doc.
+          try offsets.foreach(_.record(OffsetMapping(
+            r.getAs[String]("topic"), r.getAs[Int]("partition"),
+            r.getAs[Long]("ledgerId"), r.getAs[Long]("entryId"),
+            dstLedger, dstEntry,
+            r.getAs[java.sql.Timestamp]("publishTime"))))
+          catch {
+            case e: Exception => throw new IllegalStateException(
+              "offset recorder failed after successful publish of " +
+                s"${r.getAs[String]("topic")}/${r.getAs[Int]("partition")}" +
+                s"@(${r.getAs[Long]("ledgerId")},${r.getAs[Long]("entryId")})" +
+                " — failing the batch for replay", e)
           }
         }
       }
-  }
+    }
 
   private def publishWithRetry(
-      r: org.apache.spark.sql.Row,
+      r: Row,
       sink: DestinationSink,
       attempts: Int): (Long, Long) = {
     var n = 0
@@ -149,7 +172,7 @@ object MessageMirror {
   }
 
   private def publishRow(
-      r: org.apache.spark.sql.Row, sink: DestinationSink): (Long, Long) =
+      r: Row, sink: DestinationSink): (Long, Long) =
     sink.publish(PulsarMessage(
             tenant = r.getAs[String]("tenant"),
             namespace = r.getAs[String]("namespace"),

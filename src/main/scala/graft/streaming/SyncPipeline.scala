@@ -220,9 +220,10 @@ class SyncPipeline(
   }
 
   /** Start the data-plane mirror (A14). One streaming query for the
-    * whole topology — partitioning by (topic, partition) inside the
-    * batch write preserves the reference's per-partition ordering
-    * without one query per topic. When `offsets` is given, every
+    * whole topology — each (topic, partition) is published in order by
+    * the one task that reads it ([[MessageMirror.start]]), which
+    * preserves the reference's per-partition ordering without one
+    * query per topic. When `offsets` is given, every
     * successful publish records its src→dst MessageId mapping (A15),
     * which [[syncCursors]] then consumes — the closed loop the
     * reference runs between its data plane and cursor plane.

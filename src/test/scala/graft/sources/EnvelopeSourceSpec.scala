@@ -205,6 +205,32 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
       "reappearing partition must not replay history")
   }
 
+  test("a trigger lists each partition once: reportLatestOffset reuses latestOffset's listing") {
+    val inner = new InMemoryBroker
+    inner.add(raw("c", 0, 1, 0), raw("c", 1, 1, 0), raw("c", 2, 1, 0), raw("c", 2, 1, 1))
+    val listings = new java.util.concurrent.atomic.AtomicInteger()
+    val latests = new java.util.concurrent.atomic.AtomicInteger()
+    val counting = new EnvelopeBroker {
+      override def topicPartitions: Seq[(String, Int)] = {
+        listings.incrementAndGet(); inner.topicPartitions
+      }
+      override def read(topic: String, partition: Int,
+          from: (Long, Long), until: (Long, Long)): Iterator[RawMessage] =
+        inner.read(topic, partition, from, until)
+      override def latest(topic: String, partition: Int): (Long, Long) = {
+        latests.incrementAndGet(); inner.latest(topic, partition)
+      }
+    }
+    EnvelopeBrokerRegistry.register("counting-listing", counting)
+    val stream = new EnvelopeMicroBatchStream("counting-listing", None)
+    val end = stream.latestOffset(stream.initialOffset(),
+      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+    val reported = stream.reportLatestOffset()
+    assert((listings.get, latests.get) == ((1, 3)))
+    assert(reported == end)
+    assert(reported.asInstanceOf[EnvelopeOffset].positions(("c", 2)) == ((1L, 2L)))
+  }
+
   test("batch write: rows land on the broker, replays are MessageId-idempotent") {
     import spark.implicits._
     val broker = new InMemoryBroker

@@ -1,0 +1,193 @@
+package graft.streaming
+
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
+
+import graft.SparkSuiteBase
+import graft.sources.{EnvelopeBrokerRegistry, EnvelopeSource, InMemoryBroker}
+
+/** How the mirror lays out a micro-batch: an envelope stream is
+  * published in the tasks that read it (no shuffle, one job per
+  * trigger), any other input is repartitioned and sorted first.
+  */
+class MirrorLayoutSpec extends SparkSuiteBase {
+
+  /** Jobs and shuffle-write bytes per (query id, batch id), from the
+    * local properties every micro-batch job carries.
+    */
+  private class BatchJobs extends SparkListener {
+    private val stageBatch = new ConcurrentHashMap[Int, (String, Long)]()
+    private val jobs = new ConcurrentHashMap[(String, Long), AtomicLong]()
+    private val shuffleWrite = new ConcurrentHashMap[(String, Long), AtomicLong]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      for {
+        p <- Option(e.properties)
+        q <- Option(p.getProperty("sql.streaming.queryId"))
+        b <- Option(p.getProperty("streaming.sql.batchId"))
+      } {
+        val key = (q, b.toLong)
+        jobs.computeIfAbsent(key, _ => new AtomicLong()).incrementAndGet()
+        shuffleWrite.computeIfAbsent(key, _ => new AtomicLong())
+        e.stageIds.foreach(s => stageBatch.put(s, key))
+      }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      for {
+        key <- Option(stageBatch.get(e.stageId))
+        m <- Option(e.taskMetrics)
+      } shuffleWrite.get(key).addAndGet(m.shuffleWriteMetrics.bytesWritten)
+
+    /** batch id → (jobs, shuffle-write bytes) of query `id`. */
+    def of(id: java.util.UUID): Map[Long, (Long, Long)] = {
+      ListenerBusDrain(spark.sparkContext)
+      jobs.asScala.collect { case ((q, b), n) if q == id.toString =>
+        b -> (n.get, shuffleWrite.get((q, b)).get)
+      }.toMap
+    }
+  }
+
+  private def withListener[T](body: BatchJobs => T): T = {
+    val l = new BatchJobs
+    spark.sparkContext.addSparkListener(l)
+    try body(l) finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def msg(topic: String, part: Int, ledger: Long, entry: Long): RawMessage =
+    RawMessage("t", "ns", topic, part, ledger, entry,
+      s"$topic/$part@$ledger:$entry".getBytes("UTF-8"), null, 0L,
+      1700000000000L + ledger * 1000 + entry, Map.empty)
+
+  /** Every dst id the recorder holds is the rank of its src id in
+    * (ledgerId, entryId) order within its (topic, partition).
+    */
+  private def assertRankOrder(mappings: Seq[OffsetMapping]): Unit =
+    mappings.groupBy(m => (m.topic, m.partition)).foreach { case ((t, p), ms) =>
+      val bySrc = ms.sortBy(m => (m.srcLedger, m.srcEntry))
+      assert(bySrc.map(m => (m.dstLedger, m.dstEntry)) ==
+        bySrc.indices.map(i => (1000L + p, i.toLong)), s"dst ids of $t/$p")
+    }
+
+  test("envelope-fed mirror: no shuffle, one job per micro-batch, order, dst ids, no-op replay") {
+    val src = new FileCluster(spark, tmpDir("ml-src"), "src")
+    val dstRoot = tmpDir("ml-dst")
+    val dst = new FileCluster(spark, dstRoot, "dst")
+    val rec = FileOffsetRecorder(s"$dstRoot/offsetmap")
+    val ckpt = tmpDir("ml-ckpt")
+    // four partitions over two topics, appended out of order across ledgers
+    val parts = Seq(("a", 0), ("a", 1), ("a", 2), ("b", 0))
+    src.addMessages((for {
+      (t, p) <- parts
+      l <- Seq(3L, 1L, 2L)
+      e <- Seq(4L, 0L, 2L)
+    } yield msg(t, p, l, e)): _*)
+
+    def run(checkpoint: String): Map[Long, (Long, Long)] = withListener { l =>
+      val q = MessageMirror.start(src.messages, dst.sink, checkpoint,
+        Trigger.AvailableNow(), offsets = Some(rec)).start()
+      q.awaitTermination()
+      l.of(q.id)
+    }
+
+    val first = run(ckpt)
+    // a restart on the same checkpoint reads only what arrived since
+    src.addMessages(msg("a", 1, 5, 0), msg("b", 0, 4, 9), msg("b", 1, 1, 0))
+    val second = run(ckpt)
+    for (batches <- Seq(first, second)) {
+      assert(batches.nonEmpty)
+      batches.foreach { case (b, (jobs, shuffled)) =>
+        assert(shuffled == 0L, s"batch $b wrote $shuffled shuffle bytes")
+        assert(jobs == 1L, s"batch $b ran $jobs jobs")
+      }
+    }
+
+    val mapped = rec.mappings
+    assert(mapped.size == parts.size * 9 + 3)
+    assertRankOrder(mapped)
+    // the destination log holds each source partition's payloads in
+    // source order at the recorded dst ids
+    val srcOrder = src.mirroredMessages.groupBy(m => (m.topic, m.partition))
+      .map { case (tp, ms) => tp -> ms.map(m => new String(m.value, "UTF-8")) }
+    val dstOrder = dst.mirroredMessages.groupBy(m => (m.topic, m.partition))
+      .map { case (tp, ms) =>
+        assert(ms.map(_.entryId) == ms.indices.map(_.toLong))
+        tp -> ms.map(m => new String(m.value, "UTF-8"))
+      }
+    assert(dstOrder == srcOrder)
+
+    // a full replay (fresh checkpoint) changes nothing downstream
+    val before = (dst.mirroredMessages.map(m => (m.topic, m.partition,
+      m.ledgerId, m.entryId, new String(m.value, "UTF-8"))), rec.mappings)
+    run(tmpDir("ml-ckpt-replay"))
+    assert((dst.mirroredMessages.map(m => (m.topic, m.partition,
+      m.ledgerId, m.entryId, new String(m.value, "UTF-8"))), rec.mappings) == before)
+  }
+
+  test("MemoryStream-fed mirror with partitions spread across tasks still shuffles and orders") {
+    import spark.implicits._
+    val name = s"ml-mem-${java.util.UUID.randomUUID()}"
+    val sink = new InMemoryCluster(name)
+    val rec = new InMemoryOffsetRecorder(name)
+    // three input partitions; every (topic, partition) lands in all of
+    // them, in descending (ledger, entry) order
+    val ms = MemoryStream[RawMessage](spark, 3)
+    ms.addData((for {
+      p <- 0 to 1
+      e <- 8L to 0L by -1L
+    } yield msg("m", p, 1L, e)): _*)
+    try {
+      val batches = withListener { l =>
+        val q = MessageMirror.start(ms.toDF(), sink, tmpDir("ml-mem-ckpt"),
+          Trigger.AvailableNow(), offsets = Some(rec)).start()
+        q.awaitTermination()
+        l.of(q.id)
+      }
+      assert(batches.values.map(_._2).sum > 0L, s"no shuffle: $batches")
+      assert(rec.mappings.size == 18)
+      assertRankOrder(rec.mappings)
+    } finally { sink.clear(); rec.clear() }
+  }
+
+  test("only an untransformed envelope stream is recognised as laid out") {
+    import spark.implicits._
+    val broker = new InMemoryBroker
+    EnvelopeBrokerRegistry.register("ml-layout", broker)
+    val stream = spark.readStream.format("pulsar-envelope")
+      .option("broker", "ml-layout").load()
+    assert(EnvelopeSource.isEnvelopeStream(stream))
+    assert(!EnvelopeSource.isEnvelopeStream(stream.filter("entryId > 0")))
+    assert(!EnvelopeSource.isEnvelopeStream(stream.repartition(2)))
+    assert(!EnvelopeSource.isEnvelopeStream(
+      spark.read.format("pulsar-envelope").option("broker", "ml-layout").load()))
+    assert(!EnvelopeSource.isEnvelopeStream(MemoryStream[RawMessage](spark, 1).toDF()))
+  }
+
+  test("two attempts of one task publishing into a FileClusterSink stay in step") {
+    val dst = new FileCluster(spark, tmpDir("ml-race"), "ml-race")
+    def pm(entry: Long) = PulsarMessage("t", "ns", "r", 0, 1L, entry,
+      s"r@$entry".getBytes("UTF-8"), None, None,
+      new java.sql.Timestamp(1700000000000L), Map.empty)
+    // each attempt deserializes its own sink; the behind attempt lists
+    // the partition after the ahead one's first create
+    val ahead = dst.sink
+    val behind = dst.sink
+    assert(ahead.publish(pm(0)) == ((1000L, 0L)))
+    assert(behind.publish(pm(0)) == ((1000L, 0L)))
+    assert(ahead.publish(pm(1)) == ((1000L, 1L)))
+    assert(ahead.publish(pm(2)) == ((1000L, 2L)))
+    assert(behind.publish(pm(1)) == ((1000L, 1L)))
+    assert(behind.publish(pm(2)) == ((1000L, 2L)))
+    // the behind attempt now leads: its next create takes a fresh entry
+    assert(behind.publish(pm(3)) == ((1000L, 3L)))
+    assert(ahead.publish(pm(3)) == ((1000L, 3L)))
+    assert(dst.mirroredMessages.map(m => (m.entryId, new String(m.value, "UTF-8"))) ==
+      (0L to 3L).map(e => (e, s"r@$e")))
+  }
+}
