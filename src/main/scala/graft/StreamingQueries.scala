@@ -687,8 +687,8 @@ object StreamingQueries extends QueryGroup {
   // The DSv2 connector on the oracle surface: a deterministic
   // formula-seeded broker (2 topics x 2 partitions x 1200 messages)
   // is read through `spark.read.format("pulsar-envelope")` — the
-  // connector's REAL batch planning (one input partition per
-  // (topic, partition), begin→latest) and row encoding are in the
+  // connector's REAL batch planning (each (topic, partition) read
+  // begin→latest by one reader) and row encoding are in the
   // gated plan (PlanSpec asserts the BatchScan) — and aggregated per
   // (topic, partition, ledger). The oracle rebuilds the same message
   // universe with generate_series. Payload length, nullable keys, and

@@ -44,6 +44,14 @@ import graft.streaming.{FileCluster, FileOffsetRecorder, SyncConfig, SyncPipelin
   * cluster construction for the pulsar-client binding (see
   * `src/live-pulsar/` and the EnvelopeBrokerTCK contract); everything
   * from SyncPipeline down is transport-agnostic.
+  *
+  * Checkpoints: the mirror's stream writes its offset and commit logs
+  * through [[graft.streaming.CheckpointFileManager]] (java.nio on
+  * `file:` paths, no Hadoop `LocalFs` forks per write).
+  * `MessageMirror.start` sets Spark's
+  * `spark.sql.streaming.checkpointFileManagerClass` on the session
+  * when it is unset, so any session that starts a mirror gets it, and
+  * a value set here (`--conf` or `SparkSession.builder`) wins.
   */
 object SyncMain {
 

@@ -39,26 +39,38 @@ private[graft] object DurableFiles {
   def createFile(d: Path, name: String, body: => Array[Byte]): Boolean = {
     val target = d.resolve(name)
     !Files.exists(target) && {
-      val tmp = Files.createTempFile(d, ".w", ".tmp")
-      try {
-        Files.write(tmp, body)
-        // atomic AND non-replacing: link(2) fails with EEXIST when the
-        // target exists, so the FIRST create wins even under a race —
-        // Files.move(ATOMIC_MOVE) maps to rename(2) on POSIX, which
-        // silently REPLACES an existing target and would let a
-        // replayed epoch overwrite a committed (possibly already-read)
-        // file. Readers never see partials either way: the name
-        // appears only fully written (dot-prefixed temps are skipped).
-        try { Files.createLink(target, tmp); true }
-        catch {
-          case _: FileAlreadyExistsException => false
-          case _: UnsupportedOperationException =>
-            // no hard links (exotic FS): fall back to the weaker
-            // rename, non-replacing only without concurrent writers
-            try { Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE); true }
-            catch { case _: FileAlreadyExistsException => false }
-        }
-      } finally Files.deleteIfExists(tmp)
+      val tmp = tempFile(d)
+      try Files.write(tmp, body)
+      catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+      commit(tmp, target)
     }
   }
+
+  /** A fresh temp file in `d`: dot-prefixed, so listings skip it. */
+  def tempFile(d: Path): Path = Files.createTempFile(d, ".w", ".tmp")
+
+  /** Give the fully written temp file `tmp` the name `target` in the
+    * same directory, atomically and without replacing, then delete
+    * `tmp`. True when this call created `target`, false when it
+    * existed already.
+    */
+  def commit(tmp: Path, target: Path): Boolean =
+    try {
+      // atomic AND non-replacing: link(2) fails with EEXIST when the
+      // target exists, so the FIRST create wins even under a race —
+      // Files.move(ATOMIC_MOVE) maps to rename(2) on POSIX, which
+      // silently REPLACES an existing target and would let a
+      // replayed epoch overwrite a committed (possibly already-read)
+      // file. Readers never see partials either way: the name
+      // appears only fully written (dot-prefixed temps are skipped).
+      try { Files.createLink(target, tmp); true }
+      catch {
+        case _: FileAlreadyExistsException => false
+        case _: UnsupportedOperationException =>
+          // no hard links (exotic FS): fall back to the weaker
+          // rename, non-replacing only without concurrent writers
+          try { Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE); true }
+          catch { case _: FileAlreadyExistsException => false }
+      }
+    } finally Files.deleteIfExists(tmp)
 }

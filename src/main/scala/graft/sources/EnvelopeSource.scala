@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
@@ -20,8 +20,8 @@ import graft.streaming.RawMessage
 
 /** DataSource-V2 connector for the replication envelope stream —
   * the Spark-side half of the reference's consumer plane
-  * (`PulsarPartitionSyncWorker.java:95-124`): one input partition per
-  * physical (topic, partition), per-partition (ledgerId, entryId)
+  * (`PulsarPartitionSyncWorker.java:95-124`): each physical (topic,
+  * partition) read by one reader, per-partition (ledgerId, entryId)
   * order preserved, replayable offsets = the reference's subscription
   * read position.
   *
@@ -37,10 +37,14 @@ import graft.streaming.RawMessage
   * exercised end-to-end (EnvelopeSourceSpec, incl. driving
   * [[graft.streaming.MessageMirror]] from this source).
   *
-  * LAYOUT CONTRACT: every scan, batch or micro-batch, plans exactly
-  * one input partition per (topic, partition), and its reader emits
-  * that partition's rows in (ledgerId, entryId) order — so each Spark
-  * partition holds one (topic, partition), in source order. The scan
+  * LAYOUT CONTRACT: every scan, batch or micro-batch, plans each
+  * (topic, partition) wholly inside one input partition, and its
+  * reader emits that partition's rows contiguously in (ledgerId,
+  * entryId) order. An input partition may hold several (topic,
+  * partition) ranges, read one after another in (topic, partition)
+  * order: a scan packs its ranges into at most the session's
+  * `defaultParallelism` input partitions, so a trigger runs at most
+  * one task per core (see [[EnvelopeInputPartition.pack]]). The scan
   * does not report this layout to the planner (Spark 4.1 plans
   * streaming scans without a reported partitioning or ordering), so a
   * consumer that relies on it recognises the stream by type with
@@ -267,10 +271,10 @@ private[sources] class EnvelopeScan(
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
       val broker = EnvelopeBrokerRegistry.get(brokerName)
-      broker.topicPartitions.map { case (t, p) =>
+      EnvelopeInputPartition.pack(brokerName, broker.topicPartitions.map { case (t, p) =>
         val (el, ee) = broker.latest(t, p)
-        EnvelopeInputPartition(brokerName, t, p, 0L, 0L, el, ee): InputPartition
-      }.toArray
+        EnvelopeRange(t, p, 0L, 0L, el, ee)
+      })
     }
     override def createReaderFactory(): PartitionReaderFactory = readerFactory
   }
@@ -425,12 +429,12 @@ private[sources] class EnvelopeMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[EnvelopeOffset].positions
     val e = end.asInstanceOf[EnvelopeOffset].positions
-    e.toSeq.sortBy(_._1).flatMap { case ((t, p), (el, ee)) =>
+    EnvelopeInputPartition.pack(brokerName, e.toSeq.flatMap { case ((t, p), (el, ee)) =>
       val (sl, se) = s.getOrElse((t, p), (0L, 0L))
       if (Ordering[(Long, Long)].lt((sl, se), (el, ee)))
-        Some(EnvelopeInputPartition(brokerName, t, p, sl, se, el, ee): InputPartition)
+        Some(EnvelopeRange(t, p, sl, se, el, ee))
       else None
-    }.toArray
+    })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -498,20 +502,63 @@ private[sources] class EnvelopeDataWriter(brokerName: String)
   override def close(): Unit = ()
 }
 
-/** One physical (topic, partition) slice — the planning unit, exactly
+/** One physical (topic, partition)'s slice [from, until) of a scan —
   * the reference's one-consumer-per-partition (A13).
   */
-private[sources] case class EnvelopeInputPartition(
-    brokerName: String,
+private[sources] case class EnvelopeRange(
     topic: String,
     partition: Int,
     fromLedger: Long, fromEntry: Long,
-    untilLedger: Long, untilEntry: Long) extends InputPartition
+    untilLedger: Long, untilEntry: Long) {
+
+  /** The message count the positions imply within a ledger (exact when
+    * the slice stays in one ledger, the until ledger's entries when it
+    * spans ledgers), at least 1. Packing needs no more: a wrong
+    * estimate unbalances tasks, it never misplaces a row.
+    */
+  def estimate: Long =
+    math.max(1L, if (fromLedger == untilLedger) untilEntry - fromEntry else untilEntry)
+}
+
+/** The planning unit: the ranges one reader serves, one after another,
+  * in (topic, partition) order.
+  */
+private[sources] case class EnvelopeInputPartition(
+    brokerName: String,
+    ranges: Seq[EnvelopeRange]) extends InputPartition
+
+private[sources] object EnvelopeInputPartition {
+
+  /** Pack `ranges` into at most `slots` input partitions (default: the
+    * active session's `defaultParallelism`, one task per core): largest
+    * estimate first, each onto the least-loaded partition. A trigger
+    * then pays each task's fixed setup at most once per core instead
+    * of once per (topic, partition).
+    */
+  def pack(
+      brokerName: String,
+      ranges: Seq[EnvelopeRange],
+      slots: Int = SparkSession.active.sparkContext.defaultParallelism)
+      : Array[InputPartition] = {
+    val bins = Array.fill(math.min(slots, ranges.size))(List.empty[EnvelopeRange])
+    val load = new Array[Long](bins.length)
+    ranges.sortBy(r => (-r.estimate, r.topic, r.partition)).foreach { r =>
+      val i = load.indices.minBy(load(_))
+      bins(i) = r :: bins(i)
+      load(i) += r.estimate
+    }
+    // every estimate is >= 1, so each bin got a range before any got two
+    bins.map(_.sortBy(r => (r.topic, r.partition)))
+      .sortBy(b => (b.head.topic, b.head.partition))
+      .map(EnvelopeInputPartition(brokerName, _): InputPartition)
+  }
+}
 
 private[sources] case class EnvelopeReaderFactory(required: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[EnvelopeInputPartition]
+    val broker = EnvelopeBrokerRegistry.get(p.brokerName)
     new PartitionReader[InternalRow] {
       private val serializer = EnvelopeSource.encoder.createSerializer()
       // project the full envelope row down to the pruned schema with a
@@ -524,9 +571,10 @@ private[sources] case class EnvelopeReaderFactory(required: StructType)
             org.apache.spark.sql.catalyst.expressions.BoundReference(
               i, f.dataType, f.nullable): org.apache.spark.sql.catalyst.expressions.Expression
           })
-      private val it = EnvelopeBrokerRegistry.get(p.brokerName)
-        .read(p.topic, p.partition,
-          (p.fromLedger, p.fromEntry), (p.untilLedger, p.untilEntry))
+      // each range is opened only once the one before it is drained
+      private val it = p.ranges.iterator.flatMap(r =>
+        broker.read(r.topic, r.partition,
+          (r.fromLedger, r.fromEntry), (r.untilLedger, r.untilEntry)))
       private var current: InternalRow = _
       override def next(): Boolean =
         if (it.hasNext) { current = project(serializer(it.next())).copy(); true }

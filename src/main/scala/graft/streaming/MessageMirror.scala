@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
@@ -10,11 +10,11 @@ import graft.sources.EnvelopeSource
 
 /** Data-plane message mirror (SURVEY §2A A14, §3.2): consume the
   * source stream, apply the envelope projection, and write to the
-  * destination through an idempotent `foreachBatch` sink. The
-  * reference's "ack only after dst write succeeds"
-  * (`PulsarPartitionSyncWorker.java:232-242`) maps to Structured
-  * Streaming's checkpoint commit: a micro-batch's offsets are only
-  * committed after `foreachBatch` returns, so a crash before the sink
+  * destination through an idempotent sink. The reference's "ack only
+  * after dst write succeeds" (`PulsarPartitionSyncWorker.java:232-242`)
+  * maps to Structured Streaming's checkpoint commit: a micro-batch's
+  * offsets are only committed after its write job (the `foreach`
+  * writer's or `foreachBatch`'s) succeeds, so a crash before the sink
   * finishes replays the batch — at-least-once, exactly like the
   * reference. The sink dedupes on MessageId, upgrading the pipeline to
   * effectively-once.
@@ -38,18 +38,29 @@ object MessageMirror {
 
   private val DefaultPublishAttempts = 3
 
-  /** Start the mirror: projection → foreachBatch into `sink`.
-    * Per-partition ordering (the reference's single consumer+producer
-    * per partition) needs each micro-batch laid out as one task per
-    * (topic, partition), in (ledgerId, entryId) order within it.
+  /** Start the mirror: projection → `sink`. Per-partition ordering
+    * (the reference's single consumer+producer per partition) needs
+    * each (topic, partition) of a micro-batch published by one task,
+    * in (ledgerId, entryId) order.
     *
     * An envelope stream ([[EnvelopeSource.isEnvelopeStream]]) is
-    * already laid out so by its source's layout contract, so each
-    * source partition is read, published and offset-recorded in the
-    * task that reads it: one stage and one job per trigger, no
-    * shuffle. Any other stream (a MemoryStream, a file source, a
-    * transformed envelope stream) goes through [[writeBatch]]'s
-    * exchange and sort.
+    * already laid out so by its source's layout contract, so it is
+    * written through a `foreach` writer: Spark plans the write inside
+    * the micro-batch's own execution, and each source partition is
+    * read, published and offset-recorded in the task that reads it —
+    * one stage and one job per trigger, no shuffle. Any other stream
+    * (a MemoryStream, a file source, a transformed envelope stream)
+    * goes through `foreachBatch` and [[writeBatch]]'s exchange and
+    * sort. Both paths publish each row with [[deliver]].
+    *
+    * The checkpoint's offset and commit logs are written through
+    * [[CheckpointFileManager]] (java.nio on `file:` paths): `start`
+    * sets `spark.sql.streaming.checkpointFileManagerClass` on the
+    * stream's session when that setting is unset. Spark reads it only
+    * from the session configuration — a query has no option for it —
+    * so it holds for every later streaming query of that session. It
+    * is set here rather than in `SyncMain.main` because other entry
+    * points build their own sessions (replbench does).
     */
   def start(
       raw: DataFrame,
@@ -58,22 +69,51 @@ object MessageMirror {
       trigger: Trigger = Trigger.AvailableNow(),
       deadLetter: Option[DeadLetterSink] = None,
       offsets: Option[OffsetRecorder] = None): DataStreamWriter[Row] = {
-    val laidOut = EnvelopeSource.isEnvelopeStream(raw)
-    project(raw).writeStream
+    val conf = raw.sparkSession.conf
+    if (conf.getOption(CheckpointFileManager.ConfKey).isEmpty)
+      conf.set(CheckpointFileManager.ConfKey, classOf[CheckpointFileManager].getName)
+    val writer = project(raw).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (laidOut) publish(batch, sink, deadLetter, offsets, DefaultPublishAttempts)
-        else writeBatch(batch, sink, deadLetter, offsets)
+    if (EnvelopeSource.isEnvelopeStream(raw))
+      writer.foreach(new MirrorWriter(sink, deadLetter, offsets))
+    else
+      writer.foreachBatch { (batch: Dataset[Row], _: Long) =>
+        writeBatch(batch, sink, deadLetter, offsets)
       }
   }
 
-  /** The sink body for any input: repartition `batch` by (topic,
-    * partition) so each physical partition is written by one task, in
-    * (ledgerId, entryId) order within it, then publish.
+  /** The `foreach` writer of an envelope stream: [[deliver]] per row. */
+  private class MirrorWriter(
+      sink: DestinationSink,
+      deadLetter: Option[DeadLetterSink],
+      offsets: Option[OffsetRecorder]) extends ForeachWriter[Row] {
+    override def open(partitionId: Long, epochId: Long): Boolean = true
+    override def process(r: Row): Unit = deliver(r, sink, deadLetter, offsets)
+    override def close(errorOrNull: Throwable): Unit = ()
+  }
+
+  /** The `foreachBatch` body for any other input: repartition `batch`
+    * by (topic, partition) so each physical partition is written by
+    * one task, sort it into (ledgerId, entryId) order within it, then
+    * [[deliver]] every row in that order.
+    */
+  private def writeBatch(
+      batch: Dataset[Row],
+      sink: DestinationSink,
+      deadLetter: Option[DeadLetterSink],
+      offsets: Option[OffsetRecorder]): Unit =
+    batch.repartition(col("topic"), col("partition"))
+      .sortWithinPartitions(col("topic"), col("partition"),
+        col("ledgerId"), col("entryId"))
+      .foreachPartition { rows: Iterator[Row] =>
+        rows.foreach(deliver(_, sink, deadLetter, offsets))
+      }
+
+  /** Publish one row and record its src→dst mapping.
     *
     * Error isolation (SURVEY §2A A23): a publish is retried
-    * `publishAttempts` times (transient-failure absorption — the
+    * `DefaultPublishAttempts` times (transient-failure absorption — the
     * reference gets this from broker redelivery on no-ack); if all
     * attempts fail and a DeadLetterSink is configured, the failure is
     * recorded per message and never aborts the siblings. NOTE the
@@ -88,70 +128,51 @@ object MessageMirror {
     * would lose the src→dst mapping): it fails the batch distinctly,
     * and the replay re-publishes idempotently and re-records.
     */
-  def writeBatch(
-      batch: Dataset[Row],
-      sink: DestinationSink,
-      deadLetter: Option[DeadLetterSink] = None,
-      offsets: Option[OffsetRecorder] = None,
-      publishAttempts: Int = DefaultPublishAttempts): Unit =
-    publish(
-      batch.repartition(col("topic"), col("partition"))
-        .sortWithinPartitions(col("topic"), col("partition"),
-          col("ledgerId"), col("entryId")),
-      sink, deadLetter, offsets, publishAttempts)
-
-  /** The one publish loop: every task publishes its rows in the order
-    * it reads them.
-    */
-  private def publish(
-      laidOut: Dataset[Row],
+  private def deliver(
+      r: Row,
       sink: DestinationSink,
       deadLetter: Option[DeadLetterSink],
-      offsets: Option[OffsetRecorder],
-      publishAttempts: Int): Unit =
-    laidOut.foreachPartition { rows: Iterator[Row] =>
-      rows.foreach { r =>
-        val published: Option[(Long, Long)] =
-          try Some(publishWithRetry(r, sink, publishAttempts))
-          catch {
-            // a task kill (speculation, stage retry, query stop) is
-            // NOT a sink failure: fail the task so the batch replays,
-            // never dead-letter on it. Spark kills via interrupt OR
-            // TaskKilledException (a RuntimeException — without its
-            // own case a killed task would record spurious DLQ
-            // entries for messages the retried task then delivers).
-            case e: InterruptedException => throw e
-            case e: org.apache.spark.TaskKilledException => throw e
-            case e: Exception => deadLetter match {
-              case Some(dl) =>
-                dl.record(
-                  r.getAs[String]("topic"), r.getAs[Int]("partition"),
-                  r.getAs[Long]("ledgerId"), r.getAs[Long]("entryId"),
-                  e.getMessage)
-                None
-              case None => throw e // no DLQ → fail the batch, replay
-            }
-          }
-        published.foreach { case (dstLedger, dstEntry) =>
-          // A15: record src->dst translation on publish success;
-          // recordedTs = publishTime keeps replays deterministic
-          // (the reference stamps wall-clock nanoTime). Own
-          // try-scope: see writeBatch's doc.
-          try offsets.foreach(_.record(OffsetMapping(
-            r.getAs[String]("topic"), r.getAs[Int]("partition"),
-            r.getAs[Long]("ledgerId"), r.getAs[Long]("entryId"),
-            dstLedger, dstEntry,
-            r.getAs[java.sql.Timestamp]("publishTime"))))
-          catch {
-            case e: Exception => throw new IllegalStateException(
-              "offset recorder failed after successful publish of " +
-                s"${r.getAs[String]("topic")}/${r.getAs[Int]("partition")}" +
-                s"@(${r.getAs[Long]("ledgerId")},${r.getAs[Long]("entryId")})" +
-                " — failing the batch for replay", e)
-          }
+      offsets: Option[OffsetRecorder]): Unit = {
+    val published: Option[(Long, Long)] =
+      try Some(publishWithRetry(r, sink, DefaultPublishAttempts))
+      catch {
+        // a task kill (speculation, stage retry, query stop) is NOT a
+        // sink failure: fail the task so the batch replays, never
+        // dead-letter on it. Spark kills via interrupt OR
+        // TaskKilledException (a RuntimeException — without its own
+        // case a killed task would record spurious DLQ entries for
+        // messages the retried task then delivers).
+        case e: InterruptedException => throw e
+        case e: org.apache.spark.TaskKilledException => throw e
+        case e: Exception => deadLetter match {
+          case Some(dl) =>
+            dl.record(
+              r.getAs[String]("topic"), r.getAs[Int]("partition"),
+              r.getAs[Long]("ledgerId"), r.getAs[Long]("entryId"),
+              e.getMessage)
+            None
+          case None => throw e // no DLQ → fail the batch, replay
         }
       }
+    published.foreach { case (dstLedger, dstEntry) =>
+      // A15: record src->dst translation on publish success;
+      // recordedTs = publishTime keeps replays deterministic (the
+      // reference stamps wall-clock nanoTime). Own try-scope: see
+      // above.
+      try offsets.foreach(_.record(OffsetMapping(
+        r.getAs[String]("topic"), r.getAs[Int]("partition"),
+        r.getAs[Long]("ledgerId"), r.getAs[Long]("entryId"),
+        dstLedger, dstEntry,
+        r.getAs[java.sql.Timestamp]("publishTime"))))
+      catch {
+        case e: Exception => throw new IllegalStateException(
+          "offset recorder failed after successful publish of " +
+            s"${r.getAs[String]("topic")}/${r.getAs[Int]("partition")}" +
+            s"@(${r.getAs[Long]("ledgerId")},${r.getAs[Long]("entryId")})" +
+            " — failing the batch for replay", e)
+      }
     }
+  }
 
   private def publishWithRetry(
       r: Row,
@@ -190,7 +211,7 @@ object MessageMirror {
 
 /** Destination abstraction — a real deployment holds a Pulsar producer
   * per executor; tests use [[InMemoryCluster]]. `publish` MUST be
-  * idempotent on (topic, partition, ledgerId, entryId): foreachBatch
+  * idempotent on (topic, partition, ledgerId, entryId): the mirror
   * replays whole micro-batches on failure (at-least-once), and the
   * MessageId dedup is what the reference gets from Pulsar broker
   * dedup. Returns the DESTINATION-assigned MessageId (a replayed

@@ -34,7 +34,8 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
     val df = spark.read.format(fmt).option("broker", "es-batch").load()
     assert(df.schema == EnvelopeSource.schema)
     assert(df.count() == 4)
-    assert(df.rdd.getNumPartitions == 3) // (a,0), (a,1), (b,0)
+    // (a,0), (a,1), (b,0): three ranges on four cores, one reader each
+    assert(df.rdd.getNumPartitions == 3)
     val got = df.select("topic", "partition", "ledgerId", "entryId")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     assert(got == Set(("a", 0, 1L, 0L), ("a", 0, 1L, 1L), ("a", 1, 1L, 0L),
@@ -194,15 +195,35 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
       .asInstanceOf[EnvelopeOffset]
     assert(next.positions(("tp", 1)) == ((1L, 1L)),
       s"hidden partition lost its position: ${next.positions}")
-    // and nothing replays when it reappears
+    // and nothing replays when it reappears; a new message on
+    // partition 0 makes the next batch non-empty
     hide = false
+    inner.add(raw("tp", 0, 1, 2))
     val after = stream.latestOffset(next,
         org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
       .asInstanceOf[EnvelopeOffset]
     assert(after.positions(("tp", 1)) == ((1L, 1L)))
-    val parts = stream.planInputPartitions(next, after)
-    assert(!parts.exists(_.asInstanceOf[EnvelopeInputPartition].partition == 1),
-      "reappearing partition must not replay history")
+    val planned = stream.planInputPartitions(next, after)
+      .flatMap(_.asInstanceOf[EnvelopeInputPartition].ranges).toSeq
+    assert(planned == Seq(EnvelopeRange("tp", 0, 1L, 2L, 1L, 3L)),
+      s"reappearing partition must not replay history: $planned")
+  }
+
+  test("packing: at most one input partition per slot, each range whole, largest first onto the least loaded") {
+    val rs = Seq(
+      EnvelopeRange("a", 0, 1L, 0L, 1L, 10L), // 10
+      EnvelopeRange("a", 1, 1L, 4L, 1L, 10L), // 6
+      EnvelopeRange("b", 0, 1L, 5L, 1L, 10L), // 5
+      EnvelopeRange("b", 1, 0L, 7L, 2L, 4L)) // spans ledgers: 4
+    def ranges(slots: Int) = EnvelopeInputPartition.pack("b", rs, slots).toSeq
+      .map(_.asInstanceOf[EnvelopeInputPartition].ranges.map(r => (r.topic, r.partition)))
+    // 10 and 6 open the two partitions, 5 joins the 6, 4 joins the 10;
+    // each partition reads its ranges in (topic, partition) order
+    assert(ranges(2) == Seq(Seq(("a", 0), ("b", 1)), Seq(("a", 1), ("b", 0))))
+    assert(ranges(1) == Seq(rs.map(r => (r.topic, r.partition))))
+    assert(ranges(8).map(_.size) == Seq(1, 1, 1, 1))
+    assert(ranges(4) == ranges(8))
+    assert(EnvelopeInputPartition.pack("b", Nil, 4).isEmpty)
   }
 
   test("a trigger lists each partition once: reportLatestOffset reuses latestOffset's listing") {

@@ -5,10 +5,10 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.{DefaultParallelism, ListenerBusDrain}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSuiteBase
 import graft.sources.{EnvelopeBrokerRegistry, EnvelopeSource, InMemoryBroker}
@@ -19,12 +19,13 @@ import graft.sources.{EnvelopeBrokerRegistry, EnvelopeSource, InMemoryBroker}
   */
 class MirrorLayoutSpec extends SparkSuiteBase {
 
-  /** Jobs and shuffle-write bytes per (query id, batch id), from the
-    * local properties every micro-batch job carries.
+  /** Jobs, tasks and shuffle-write bytes per (query id, batch id),
+    * from the local properties every micro-batch job carries.
     */
   private class BatchJobs extends SparkListener {
     private val stageBatch = new ConcurrentHashMap[Int, (String, Long)]()
     private val jobs = new ConcurrentHashMap[(String, Long), AtomicLong]()
+    private val tasks = new ConcurrentHashMap[(String, Long), AtomicLong]()
     private val shuffleWrite = new ConcurrentHashMap[(String, Long), AtomicLong]()
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -35,6 +36,7 @@ class MirrorLayoutSpec extends SparkSuiteBase {
       } {
         val key = (q, b.toLong)
         jobs.computeIfAbsent(key, _ => new AtomicLong()).incrementAndGet()
+        tasks.computeIfAbsent(key, _ => new AtomicLong())
         shuffleWrite.computeIfAbsent(key, _ => new AtomicLong())
         e.stageIds.foreach(s => stageBatch.put(s, key))
       }
@@ -43,13 +45,16 @@ class MirrorLayoutSpec extends SparkSuiteBase {
       for {
         key <- Option(stageBatch.get(e.stageId))
         m <- Option(e.taskMetrics)
-      } shuffleWrite.get(key).addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      } {
+        tasks.get(key).incrementAndGet()
+        shuffleWrite.get(key).addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      }
 
-    /** batch id → (jobs, shuffle-write bytes) of query `id`. */
-    def of(id: java.util.UUID): Map[Long, (Long, Long)] = {
+    /** batch id → (jobs, tasks, shuffle-write bytes) of query `id`. */
+    def of(id: java.util.UUID): Map[Long, (Long, Long, Long)] = {
       ListenerBusDrain(spark.sparkContext)
       jobs.asScala.collect { case ((q, b), n) if q == id.toString =>
-        b -> (n.get, shuffleWrite.get((q, b)).get)
+        b -> ((n.get, tasks.get((q, b)).get, shuffleWrite.get((q, b)).get))
       }.toMap
     }
   }
@@ -89,7 +94,7 @@ class MirrorLayoutSpec extends SparkSuiteBase {
       e <- Seq(4L, 0L, 2L)
     } yield msg(t, p, l, e)): _*)
 
-    def run(checkpoint: String): Map[Long, (Long, Long)] = withListener { l =>
+    def run(checkpoint: String): Map[Long, (Long, Long, Long)] = withListener { l =>
       val q = MessageMirror.start(src.messages, dst.sink, checkpoint,
         Trigger.AvailableNow(), offsets = Some(rec)).start()
       q.awaitTermination()
@@ -102,7 +107,7 @@ class MirrorLayoutSpec extends SparkSuiteBase {
     val second = run(ckpt)
     for (batches <- Seq(first, second)) {
       assert(batches.nonEmpty)
-      batches.foreach { case (b, (jobs, shuffled)) =>
+      batches.foreach { case (b, (jobs, _, shuffled)) =>
         assert(shuffled == 0L, s"batch $b wrote $shuffled shuffle bytes")
         assert(jobs == 1L, s"batch $b ran $jobs jobs")
       }
@@ -130,6 +135,88 @@ class MirrorLayoutSpec extends SparkSuiteBase {
       m.ledgerId, m.entryId, new String(m.value, "UTF-8"))), rec.mappings) == before)
   }
 
+  test("envelope-fed mirror on a 2-core session: one job, at most 2 tasks, no shuffle") {
+    val src = new FileCluster(spark, tmpDir("ml-pack-src"), "src")
+    val dst = new FileCluster(spark, tmpDir("ml-pack-dst"), "dst")
+    val name = s"ml-pack-${java.util.UUID.randomUUID()}"
+    val rec = new InMemoryOffsetRecorder(name)
+    src.addMessages((for {
+      p <- 0 until 5
+      e <- 3L to 0L by -1L
+    } yield msg("k", p, 1L, e)): _*)
+    val batches = DefaultParallelism.withValue(spark.sparkContext, 2) {
+      withListener { l =>
+        val q = MessageMirror.start(src.messages, dst.sink, tmpDir("ml-pack-ckpt"),
+          Trigger.AvailableNow(), offsets = Some(rec)).start()
+        q.awaitTermination()
+        l.of(q.id)
+      }
+    }
+    try {
+      assert(batches.nonEmpty)
+      batches.foreach { case (b, (jobs, tasks, shuffled)) =>
+        assert(jobs == 1L, s"batch $b ran $jobs jobs")
+        // five (topic, partition) ranges packed into two input partitions
+        assert(tasks == 2L, s"batch $b ran $tasks tasks")
+        assert(shuffled == 0L, s"batch $b wrote $shuffled shuffle bytes")
+      }
+      assert(rec.mappings.size == 20)
+      assertRankOrder(rec.mappings)
+    } finally rec.clear()
+  }
+
+  test("envelope-fed mirror: an undeliverable message is dead-lettered, its siblings publish in order, the batch commits") {
+    val src = new FileCluster(spark, tmpDir("ml-dl-src"), "src")
+    val name = s"ml-dl-${java.util.UUID.randomUUID()}"
+    val dst = new InMemoryCluster(name)
+    val dl = new InMemoryDeadLetter(name)
+    val rec = new InMemoryOffsetRecorder(name)
+    val ckpt = tmpDir("ml-dl-ckpt")
+    src.addMessages((for (p <- 0 to 1; e <- 4L to 0L by -1L) yield msg("d", p, 1L, e)): _*)
+    val sink = PoisonSink(dst, ("d", 1, 1L, 2L))
+    def run(): Unit = MessageMirror.start(src.messages, sink, ckpt,
+      Trigger.AvailableNow(), deadLetter = Some(dl), offsets = Some(rec))
+      .start().awaitTermination()
+    try {
+      run()
+      assert(dl.entries.map(e => (e._1, e._2, e._3, e._4, e._5)) ==
+        Seq(("d", 1, 1L, 2L, "poison")))
+      assert(dst.messages.map(m => (m.partition, m.entryId)) ==
+        (for (p <- 0 to 1; e <- 0L to 4L if (p, e) != ((1, 2L))) yield (p, e)))
+      assertRankOrder(rec.mappings)
+      // the batch committed: a restart has nothing left to publish
+      assert(new java.io.File(ckpt, "commits/0").exists)
+      run()
+      assert(dl.entries.size == 1 && rec.mappings.size == 9)
+    } finally { dst.clear(); dl.clear(); rec.clear() }
+  }
+
+  test("envelope-fed mirror without a dead-letter sink fails; a restart delivers each message once") {
+    val src = new FileCluster(spark, tmpDir("ml-fail-src"), "src")
+    val dstRoot = tmpDir("ml-fail-dst")
+    val dst = new FileCluster(spark, dstRoot, "dst")
+    val rec = FileOffsetRecorder(s"$dstRoot/offsetmap")
+    val ckpt = tmpDir("ml-fail-ckpt")
+    src.addMessages((for (p <- 0 to 2; e <- 0L to 4L) yield msg("f", p, 1L, e)): _*)
+    val failing = MessageMirror.start(src.messages, PoisonSink(dst.sink, ("f", 1, 1L, 3L)),
+      ckpt, Trigger.AvailableNow(), offsets = Some(rec)).start()
+    intercept[StreamingQueryException](failing.awaitTermination())
+    assert(!new java.io.File(ckpt, "commits/0").exists)
+    MessageMirror.start(src.messages, dst.sink, ckpt,
+      Trigger.AvailableNow(), offsets = Some(rec)).start().awaitTermination()
+    // each source message exactly once at the destination, in source
+    // order at dense dst entries, each mapped once
+    val dstOrder = dst.mirroredMessages.groupBy(m => (m.topic, m.partition))
+      .map { case (tp, ms) =>
+        assert(ms.map(_.entryId) == ms.indices.map(_.toLong), s"dst entries of $tp")
+        tp -> ms.map(m => new String(m.value, "UTF-8"))
+      }
+    assert(dstOrder == src.mirroredMessages.groupBy(m => (m.topic, m.partition))
+      .map { case (tp, ms) => tp -> ms.map(m => new String(m.value, "UTF-8")) })
+    assert(rec.mappings.size == 15)
+    assertRankOrder(rec.mappings)
+  }
+
   test("MemoryStream-fed mirror with partitions spread across tasks still shuffles and orders") {
     import spark.implicits._
     val name = s"ml-mem-${java.util.UUID.randomUUID()}"
@@ -149,7 +236,7 @@ class MirrorLayoutSpec extends SparkSuiteBase {
         q.awaitTermination()
         l.of(q.id)
       }
-      assert(batches.values.map(_._2).sum > 0L, s"no shuffle: $batches")
+      assert(batches.values.map(_._3).sum > 0L, s"no shuffle: $batches")
       assert(rec.mappings.size == 18)
       assertRankOrder(rec.mappings)
     } finally { sink.clear(); rec.clear() }
@@ -190,4 +277,13 @@ class MirrorLayoutSpec extends SparkSuiteBase {
     assert(dst.mirroredMessages.map(m => (m.entryId, new String(m.value, "UTF-8"))) ==
       (0L to 3L).map(e => (e, s"r@$e")))
   }
+}
+
+/** Fails every publish of the `poison` MessageId; forwards the rest. */
+private case class PoisonSink(inner: DestinationSink, poison: (String, Int, Long, Long))
+    extends DestinationSink {
+  override def publish(m: PulsarMessage): (Long, Long) =
+    if ((m.topic, m.partition, m.ledgerId, m.entryId) == poison)
+      throw new RuntimeException("poison")
+    else inner.publish(m)
 }
