@@ -572,13 +572,13 @@ object StreamingQueries extends QueryGroup {
   }
 
   // ------------------------------------------------------------ S-8/S-9
-  // The END-TO-END mirror on the oracle gate (r15 VERDICT #4 — the
-  // last two spec-gated §2B IDs): the FULL foreachBatch mirror
-  // topology (MessageMirror.start → projection → repartition by
-  // (topic, partition) → per-partition ordered publish → idempotent
+  // The END-TO-END mirror on the oracle gate (the last two
+  // spec-gated §2B IDs): the deployed mirror topology
+  // (MessageMirror.start → `pulsar-envelope` scan → projection →
+  // per-partition ordered publish in the reading task → idempotent
   // InMemoryCluster sink + A15 offset recorder) runs over a
-  // deterministic events-derived envelope feed with
-  // Trigger.AvailableNow (S-9) — and then runs a SECOND tick from a
+  // deterministic events-derived feed seeded into an InMemoryBroker,
+  // with Trigger.AvailableNow (S-9) — and then runs a SECOND tick from a
   // fresh checkpoint, i.e. a full at-least-once replay of every
   // message. The gated rows are the destination cluster's final state
   // joined with the recorded src→dst offset map, so the oracle
@@ -593,15 +593,17 @@ object StreamingQueries extends QueryGroup {
   // replay tick changed NOTHING (a non-idempotent sink or recorder
   // would double entries or reassign ids and break the hash).
   //
-  // Scale note: the distributed data path is the projection +
-  // repartition + per-partition publish loop — at deployment the sink
-  // is a Pulsar producer per executor and nothing returns to the
-  // driver. The JVM-wide InMemoryCluster (valid under local[*]) is
-  // the verification surface standing in for the destination broker,
-  // exactly like q60's registry stands in for the source transport;
-  // the driver-side materialization below reads the TEST DOUBLE, not
-  // the pipeline. The feed subsets events (event_id % 4 = 1) to keep
-  // the double's footprint deck-safe.
+  // Scale note: the distributed data path is the envelope scan +
+  // projection + per-partition publish loop, one task per packed
+  // input partition and no shuffle — at deployment the source is a
+  // Pulsar reader, the sink a Pulsar producer per executor, and
+  // nothing returns to the driver. The JVM-wide InMemoryBroker and
+  // InMemoryCluster (valid under local[*]) are the verification
+  // surface standing in for the two brokers, exactly like q60's
+  // registry; the seeding job and the driver-side materialization
+  // below touch the TEST DOUBLES, not the pipeline. The feed subsets
+  // events (event_id % 4 = 1) to keep the doubles' footprint
+  // deck-safe.
   q("q271_mirror_e2e",
     """WITH f AS (SELECT event_type AS topic,
       |    CAST(user_id % 4 AS INT) AS part,
@@ -621,8 +623,10 @@ object StreamingQueries extends QueryGroup {
       |  value_str, key, event_time_ms, publish_time_ms, prop_src
       |FROM r ORDER BY topic, part, src_ledger, src_entry""".stripMargin) {
     (s, d) =>
+    import graft.sources.{EnvelopeBrokerRegistry, InMemoryBroker}
     import graft.streaming.{InMemoryCluster, InMemoryOffsetRecorder,
-      MessageMirror}
+      MessageMirror, RawMessage}
+    import s.implicits._
     val feed = Tables.events(s, d)
       .filter(col("event_id") % 4 === 1)
       .select(
@@ -640,6 +644,10 @@ object StreamingQueries extends QueryGroup {
           .otherwise(unix_millis(col("ts"))).as("eventTimeMillis"),
         unix_millis(col("ts")).as("publishTimeMillis"),
         map(lit("src"), col("event_type")).as("properties"))
+      .as[RawMessage]
+    // one fixed name: each run replaces the previous run's broker
+    val broker = "graft-q271"
+    EnvelopeBrokerRegistry.register(broker, new InMemoryBroker)
     val scratch = java.nio.file.Files
       .createTempDirectory("graft_q271_").toString
     val name = s"q271-${java.util.UUID.randomUUID()}"
@@ -649,13 +657,15 @@ object StreamingQueries extends QueryGroup {
     // not leak the scratch dir or the JVM-wide cluster/recorder stores
     // for this UUID across bench reps in the same JVM
     val rows = try {
-      // ONE parquet file => AvailableNow plans the whole feed as ONE
-      // micro-batch, so the per-(topic, partition) arrival sequence is
-      // the (ledger, entry) rank the oracle replays
-      feed.coalesce(1).write.mode("overwrite").parquet(s"$scratch/feed")
-      val raw = s.readStream.schema(feed.schema).parquet(s"$scratch/feed")
+      // seeded before the first tick => AvailableNow plans the whole
+      // feed as ONE micro-batch, so the per-(topic, partition) arrival
+      // sequence is the (ledger, entry) rank the oracle replays
+      feed.foreachPartition { (ms: Iterator[RawMessage]) =>
+        val b = EnvelopeBrokerRegistry.get(broker).asInstanceOf[InMemoryBroker]
+        ms.foreach(b.append)
+      }
       def tick(cp: String): Unit =
-        MessageMirror.start(raw, sink, s"$scratch/$cp",
+        MessageMirror.start(s, broker, sink, s"$scratch/$cp",
             offsets = Some(rec))
           .start().awaitTermination()
       tick("cp1")
@@ -675,7 +685,6 @@ object StreamingQueries extends QueryGroup {
       org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(scratch))
     }
-    import s.implicits._
     rows.toDF("topic", "part", "src_ledger", "src_entry",
         "dst_ledger", "dst_entry", "value_str", "key",
         "event_time_ms", "publish_time_ms", "prop_src")

@@ -60,17 +60,6 @@ object TextFns {
         split(lower(text), "\\s+"), n),
       typedlit(Seq.empty[String]))
 
-  /** MinHash signature as a single expression: k permutations
-    * simulated as `xxhash64(i, shingle)`, min per permutation. NOTE:
-    * nested higher-order functions run interpreted — for whole-table
-    * signature computation use the explode-based
-    * `graft.operators.Dedup.minhashSignatures` (same hash, ~50x
-    * faster); this form is for small/ad-hoc use.
-    */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingles, s => xxhash64(i, s))))
-
   /** Fraction of equal components between two MinHash signatures — the
     * unbiased Jaccard estimate.
     */

@@ -34,20 +34,6 @@ object RankStats {
   private def pr6(c: Column): Column =
     floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
-  /** Doubled average rank per DISTINCT value of `valueCol` (ascending
-    * ranks, 1-based): `__rank2 = 2·below + cnt + 1` where `below` is
-    * the count of rows with a strictly smaller value. Output:
-    * (valueCol, __n_s, __rank2) — distinct-value-sized.
-    */
-  private[graft] def avgRank2ByValue(
-      df: DataFrame,
-      valueCol: String): DataFrame = {
-    val g = df.groupBy(col(valueCol)).agg(count(lit(1)).as("__n_s"))
-    ScaleOps.prefixSumByRange(g, Seq(valueCol), col("__n_s"), "__below")
-      .select(col(valueCol), col("__n_s"),
-        (lit(2L) * col("__below") + col("__n_s") + lit(1L)).as("__rank2"))
-  }
-
   /** Exact ROC-AUC of `scoreCol` against boolean `labelCol` via the
     * rank-sum identity with the standard tie correction (tied scores
     * get average ranks, i.e. a tied positive/negative pair counts

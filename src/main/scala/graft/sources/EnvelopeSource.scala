@@ -4,10 +4,9 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -46,10 +45,10 @@ import graft.streaming.RawMessage
   * `defaultParallelism` input partitions, so a trigger runs at most
   * one task per core (see [[EnvelopeInputPartition.pack]]). The scan
   * does not report this layout to the planner (Spark 4.1 plans
-  * streaming scans without a reported partitioning or ordering), so a
-  * consumer that relies on it recognises the stream by type with
-  * [[EnvelopeSource.isEnvelopeStream]]. The mirror does, to publish
-  * each source partition in the task that reads it, with no shuffle.
+  * streaming scans without a reported partitioning or ordering):
+  * [[graft.streaming.MessageMirror]], which reads only this source,
+  * relies on it to publish each source partition in the task that
+  * reads it, with no shuffle.
   *
   * Usage:
   * {{{
@@ -86,22 +85,11 @@ object EnvelopeSource {
   val schema: StructType = Encoders.product[RawMessage].schema
 
   /** The row encoder, derived by Scala reflection once per JVM rather
-    * than per reader or writer. Serializers and deserializers are not
-    * thread-safe: each reader and writer takes its own from it.
+    * than per reader. Serializers are not thread-safe: each reader
+    * takes its own from it.
     */
   private[sources] lazy val encoder: ExpressionEncoder[RawMessage] =
     ExpressionEncoder[RawMessage]().resolveAndBind()
-
-  /** True when `df` is exactly an envelope stream (a `readStream` of
-    * this source, untransformed), whose every micro-batch therefore
-    * keeps the layout contract. The check is on the relation's type:
-    * the batch's plan does not show the layout.
-    */
-  private[graft] def isEnvelopeStream(df: DataFrame): Boolean =
-    df.queryExecution.analyzed match {
-      case r: StreamingRelationV2 => r.table.isInstanceOf[EnvelopeTable]
-      case _ => false
-    }
 }
 
 /** Read-side transport: what a live connector implements over the
@@ -218,25 +206,15 @@ class InMemoryBroker extends EnvelopeBroker with WritableEnvelopeBroker {
 private[sources] class EnvelopeTable(
     brokerName: String,
     maxRecordsPerMicroBatch: Option[Long] = None)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
+    extends Table with SupportsRead {
 
   override def name(): String = s"pulsar-envelope($brokerName)"
   override def schema(): StructType = EnvelopeSource.schema
   override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE).asJava
+    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new EnvelopeScanBuilder(brokerName, maxRecordsPerMicroBatch)
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new EnvelopeWrite(brokerName)
-    }
 }
 
 /** Column pruning (SupportsPushDownRequiredColumns): a projection-only
@@ -442,64 +420,6 @@ private[sources] class EnvelopeMicroBatchStream(
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-/** Write path: every task appends rows to the broker through the
-  * MessageId-idempotent [[WritableEnvelopeBroker.append]]; commit is a
-  * no-op because idempotence (not coordinator-side atomicity) is the
-  * delivery contract — a replayed task/epoch re-appends the same
-  * MessageIds harmlessly, exactly the mirror sink's at-least-once →
-  * effectively-once upgrade (A14).
-  */
-private[sources] class EnvelopeWrite(brokerName: String)
-    extends org.apache.spark.sql.connector.write.Write {
-  import org.apache.spark.sql.connector.write._
-
-  override def toBatch: BatchWrite = new BatchWrite {
-    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      EnvelopeWriterFactory(brokerName)
-    override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-    override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-  }
-
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-    new org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-      override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-          : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-        EnvelopeWriterFactory(brokerName)
-      override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-      override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-    }
-}
-
-/** Serializable factory shipped to executors (carries only the broker
-  * name; the broker itself is resolved from the registry task-side).
-  */
-private[sources] case class EnvelopeWriterFactory(brokerName: String)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory
-    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new EnvelopeDataWriter(brokerName)
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new EnvelopeDataWriter(brokerName)
-}
-
-private[sources] class EnvelopeDataWriter(brokerName: String)
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  private val deserializer = EnvelopeSource.encoder.createDeserializer()
-  private val broker = EnvelopeBrokerRegistry.get(brokerName) match {
-    case w: WritableEnvelopeBroker => w
-    case other => throw new IllegalArgumentException(
-      s"broker '$brokerName' (${other.getClass.getName}) is not writable")
-  }
-  override def write(record: InternalRow): Unit =
-    broker.append(deserializer(record))
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage =
-    new org.apache.spark.sql.connector.write.WriterCommitMessage {}
-  override def abort(): Unit = ()
-  override def close(): Unit = ()
 }
 
 /** One physical (topic, partition)'s slice [from, until) of a scan —

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.AsOfJoin
 
@@ -19,8 +18,9 @@ import graft.operators.AsOfJoin
   * [[OffsetIndex.sparseSample]]; translation is the as-of join
   * ([[OffsetIndex.translate]], no-floor ⇒ null — fixing the
   * reference's NPE, `SparseMap.java:57`); the create/reset/skip
-  * decision is a per-key state machine in `flatMapGroupsWithState`
-  * ([[CursorSync.decide]]).
+  * decision is a per-key state machine ([[CursorSync.decidePure]]),
+  * folded tick by tick by [[SyncPipeline.syncCursors]] and over a whole
+  * observation set by [[CursorSync.batchActions]].
   */
 object OffsetIndex {
 
@@ -147,17 +147,16 @@ case class CursorState(srcLedger: Long, srcEntry: Long)
 
 object CursorSync {
 
-  /** A19 state machine, one key = (topic, partition, cursor):
+  /** A19 state machine, one key = (topic, partition, cursor): fold a
+    * batch of observations, in observedTs order, over the last mirrored
+    * position `last0`:
     *   - first sighting → `create` at the translated position;
     *   - same src position as last mirrored → no output;
     *   - moved → `reset`, unless the destination already has an active
     *     consumer on the cursor (it owns it now — skip).
-    * Observations inside a batch are applied in observedTs order.
-    */
-  /** Pure state-machine core, shared by the streaming
-    * (`flatMapGroupsWithState`) and tick ([[SyncPipeline.syncCursors]])
-    * drivers: fold the batch of observations (in observedTs order)
-    * over the last mirrored position.
+    * Returns the emitted actions and the new last position. Shared by
+    * the per-tick fold ([[SyncPipeline.syncCursors]]) and
+    * [[batchActions]].
     */
   def decidePure(
       key: (String, Int, String),
@@ -182,32 +181,13 @@ object CursorSync {
     (out.result(), last)
   }
 
-  def decide(
-      key: (String, Int, String),
-      stats: Iterator[TranslatedCursorStat],
-      state: GroupState[CursorState]): Iterator[CursorAction] = {
-    val (actions, newState) = decidePure(key, state.getOption, stats.toSeq)
-    newState.foreach(state.update)
-    actions.iterator
-  }
-
-  /** Wire the state machine over a (possibly streaming) Dataset. */
-  def actions(stats: Dataset[TranslatedCursorStat])(
-      implicit spark: SparkSession): Dataset[CursorAction] = {
-    import spark.implicits._
-    stats
-      .groupByKey(s => (s.topic, s.partition, s.cursor))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(decide)
-  }
-
-  /** Batch twin of [[actions]]: every key's full observation set folds
-    * through [[decidePure]] from empty state (one logical micro-batch),
-    * with a per-key 1-based `ord` stamping each emitted action's fold
-    * position — the deterministic relation q59's DuckDB oracle replays
-    * as window/lag SQL (the fold's `last` always equals the PREVIOUS
-    * observation's position, so lag() is an exact reformulation). One
-    * shuffle on the state key; per-key state is a single position —
-    * the same bounded-state shape the streaming operator carries.
+  /** Every key's full observation set folds through [[decidePure]]
+    * from empty state (one logical micro-batch), with a per-key 1-based
+    * `ord` stamping each emitted action's fold position — the
+    * deterministic relation q59's DuckDB oracle replays as window/lag
+    * SQL (the fold's `last` always equals the PREVIOUS observation's
+    * position, so lag() is an exact reformulation). One shuffle on the
+    * state key; per-key state is a single position.
     */
   def batchActions(stats: Dataset[TranslatedCursorStat]): DataFrame = {
     val spark = stats.sparkSession

@@ -55,9 +55,12 @@ class FileCluster(
   }
 
   /** Broker registry name — stable per root, so re-instantiating the
-    * cluster re-binds the same durable message log.
+    * cluster re-binds the same durable message log. The mirror reads
+    * it from Earliest — the reference's
+    * `SubscriptionInitialPosition.Earliest`
+    * (`PulsarPartitionSyncWorker.java:111`).
     */
-  val brokerName: String = s"file:$root/messages"
+  override val brokerName: String = s"file:$root/messages"
   EnvelopeBrokerRegistry.register(brokerName,
     new FileBroker(root.resolve("messages").toString))
 
@@ -87,14 +90,6 @@ class FileCluster(
       TopicRow(dec(t), dec(ns), dec(topic),
         lines(0).toBoolean, lines(1).toInt, decProps(lines(2)))
     })
-
-  /** Streaming frame over the durable broker (Earliest position) —
-    * the reference's `SubscriptionInitialPosition.Earliest`
-    * (`PulsarPartitionSyncWorker.java:111`).
-    */
-  override def messages: DataFrame =
-    spark.readStream.format("pulsar-envelope")
-      .option("broker", brokerName).load()
 
   override def cursorStats: DataFrame =
     toDF(listFiles(dir("cursors")).map { case (name, body) =>

@@ -2,22 +2,19 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, Row}
+import org.apache.spark.sql.{DataFrame, ForeachWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.sources.EnvelopeSource
-
-/** Data-plane message mirror (SURVEY §2A A14, §3.2): consume the
-  * source stream, apply the envelope projection, and write to the
-  * destination through an idempotent sink. The reference's "ack only
-  * after dst write succeeds" (`PulsarPartitionSyncWorker.java:232-242`)
+/** Data-plane message mirror (SURVEY §2A A14, §3.2): consume a source
+  * envelope broker's stream, apply the envelope projection, and write
+  * to the destination through an idempotent sink. The reference's "ack
+  * only after dst write succeeds" (`PulsarPartitionSyncWorker.java:232-242`)
   * maps to Structured Streaming's checkpoint commit: a micro-batch's
-  * offsets are only committed after its write job (the `foreach`
-  * writer's or `foreachBatch`'s) succeeds, so a crash before the sink
-  * finishes replays the batch — at-least-once, exactly like the
-  * reference. The sink dedupes on MessageId, upgrading the pipeline to
-  * effectively-once.
+  * offsets are only committed after its `foreach` write succeeds, so a
+  * crash before the sink finishes replays the batch — at-least-once,
+  * exactly like the reference. The sink dedupes on MessageId, upgrading
+  * the pipeline to effectively-once.
   */
 object MessageMirror {
 
@@ -38,52 +35,46 @@ object MessageMirror {
 
   private val DefaultPublishAttempts = 3
 
-  /** Start the mirror: projection → `sink`. Per-partition ordering
-    * (the reference's single consumer+producer per partition) needs
-    * each (topic, partition) of a micro-batch published by one task,
-    * in (ledgerId, entryId) order.
-    *
-    * An envelope stream ([[EnvelopeSource.isEnvelopeStream]]) is
-    * already laid out so by its source's layout contract, so it is
-    * written through a `foreach` writer: Spark plans the write inside
-    * the micro-batch's own execution, and each source partition is
-    * read, published and offset-recorded in the task that reads it —
-    * one stage and one job per trigger, no shuffle. Any other stream
-    * (a MemoryStream, a file source, a transformed envelope stream)
-    * goes through `foreachBatch` and [[writeBatch]]'s exchange and
-    * sort. Both paths publish each row with [[deliver]].
+  /** Start the mirror of the envelope broker registered as `broker`
+    * ([[graft.sources.EnvelopeBrokerRegistry]]): its `pulsar-envelope`
+    * stream, Earliest position, through [[project]] into `sink`.
+    * Per-partition ordering (the reference's single consumer+producer
+    * per partition) needs each (topic, partition) of a micro-batch
+    * published by one task, in (ledgerId, entryId) order — which is the
+    * envelope source's layout contract. So the stream is written
+    * through a `foreach` writer: Spark plans the write inside the
+    * micro-batch's own execution, and each source partition is read,
+    * published ([[deliver]]) and offset-recorded in the task that
+    * reads it — one stage and one job per trigger, no shuffle.
     *
     * The checkpoint's offset and commit logs are written through
     * [[CheckpointFileManager]] (java.nio on `file:` paths): `start`
-    * sets `spark.sql.streaming.checkpointFileManagerClass` on the
-    * stream's session when that setting is unset. Spark reads it only
-    * from the session configuration — a query has no option for it —
-    * so it holds for every later streaming query of that session. It
-    * is set here rather than in `SyncMain.main` because other entry
-    * points build their own sessions (replbench does).
+    * sets `spark.sql.streaming.checkpointFileManagerClass` on `spark`
+    * when that setting is unset. Spark reads it only from the session
+    * configuration — a query has no option for it — so it holds for
+    * every later streaming query of that session. It is set here
+    * rather than in `SyncMain.main` because other entry points build
+    * their own sessions (replbench does).
     */
   def start(
-      raw: DataFrame,
+      spark: SparkSession,
+      broker: String,
       sink: DestinationSink,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       deadLetter: Option[DeadLetterSink] = None,
       offsets: Option[OffsetRecorder] = None): DataStreamWriter[Row] = {
-    val conf = raw.sparkSession.conf
-    if (conf.getOption(CheckpointFileManager.ConfKey).isEmpty)
-      conf.set(CheckpointFileManager.ConfKey, classOf[CheckpointFileManager].getName)
-    val writer = project(raw).writeStream
+    if (spark.conf.getOption(CheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(CheckpointFileManager.ConfKey, classOf[CheckpointFileManager].getName)
+    val raw = spark.readStream.format("pulsar-envelope")
+      .option("broker", broker).load()
+    project(raw).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-    if (EnvelopeSource.isEnvelopeStream(raw))
-      writer.foreach(new MirrorWriter(sink, deadLetter, offsets))
-    else
-      writer.foreachBatch { (batch: Dataset[Row], _: Long) =>
-        writeBatch(batch, sink, deadLetter, offsets)
-      }
+      .foreach(new MirrorWriter(sink, deadLetter, offsets))
   }
 
-  /** The `foreach` writer of an envelope stream: [[deliver]] per row. */
+  /** The mirror's `foreach` writer: [[deliver]] per row. */
   private class MirrorWriter(
       sink: DestinationSink,
       deadLetter: Option[DeadLetterSink],
@@ -92,23 +83,6 @@ object MessageMirror {
     override def process(r: Row): Unit = deliver(r, sink, deadLetter, offsets)
     override def close(errorOrNull: Throwable): Unit = ()
   }
-
-  /** The `foreachBatch` body for any other input: repartition `batch`
-    * by (topic, partition) so each physical partition is written by
-    * one task, sort it into (ledgerId, entryId) order within it, then
-    * [[deliver]] every row in that order.
-    */
-  private def writeBatch(
-      batch: Dataset[Row],
-      sink: DestinationSink,
-      deadLetter: Option[DeadLetterSink],
-      offsets: Option[OffsetRecorder]): Unit =
-    batch.repartition(col("topic"), col("partition"))
-      .sortWithinPartitions(col("topic"), col("partition"),
-        col("ledgerId"), col("entryId"))
-      .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach(deliver(_, sink, deadLetter, offsets))
-      }
 
   /** Publish one row and record its src→dst mapping.
     *

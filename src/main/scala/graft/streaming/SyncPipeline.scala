@@ -36,17 +36,19 @@ case class SyncConfig(
     // the driver.
     maxMetadataRows: Int = 1000000)
 
-/** Read side of a cluster's metadata + message stream (what the
+/** Read side of a cluster's metadata + message log (what the
   * reference reaches through `PulsarAdmin`/`PulsarClient` on the
-  * source). DataFrame-shaped so a live DataSource-V2 connector, a
-  * file-backed fixture, or an in-memory fake all plug in identically.
+  * source). Metadata is DataFrame-shaped, so a live listing, a
+  * file-backed fixture or an in-memory fake plug in identically; the
+  * message log is an [[graft.sources.EnvelopeBroker]] registered by
+  * name, which the mirror reads through the `pulsar-envelope` source.
   */
 trait SourceCluster {
   def tenants: DataFrame // tenant, allowedClusters
   def namespaces: DataFrame // tenant, namespace, policiesJson
   def topics: DataFrame // tenant, namespace, topic, partitioned, partitions, properties
-  /** Raw message stream (RawMessage schema), Earliest position. */
-  def messages: DataFrame
+  /** [[graft.sources.EnvelopeBrokerRegistry]] name of the message log. */
+  def brokerName: String
   def cursorStats: DataFrame // CursorStat schema
   /** Schema versions per topic (SchemaRow schema) — the schema-sync
     * extension; None = the cluster exposes no schema registry.
@@ -219,11 +221,12 @@ class SyncPipeline(
     parts.size.toLong
   }
 
-  /** Start the data-plane mirror (A14). One streaming query for the
-    * whole topology — each (topic, partition) is published in order by
-    * the one task that reads it ([[MessageMirror.start]]), which
-    * preserves the reference's per-partition ordering without one
-    * query per topic. When `offsets` is given, every
+  /** Start the data-plane mirror (A14) of the source's message log
+    * (`SourceCluster.brokerName`). One streaming query for the whole
+    * topology — each (topic, partition) is published in order by the
+    * one task that reads it ([[MessageMirror.start]]), which preserves
+    * the reference's per-partition ordering without one query per
+    * topic. When `offsets` is given, every
     * successful publish records its src→dst MessageId mapping (A15),
     * which [[syncCursors]] then consumes — the closed loop the
     * reference runs between its data plane and cursor plane.
@@ -240,7 +243,7 @@ class SyncPipeline(
       trigger: Trigger = Trigger.AvailableNow(),
       deadLetter: Option[DeadLetterSink] = None,
       offsets: Option[OffsetRecorder] = None) =
-    MessageMirror.start(source.messages, dest.sink,
+    MessageMirror.start(spark, source.brokerName, dest.sink,
       s"$checkpointDir/${conf.subscriptionName}", trigger,
       deadLetter, offsets).start()
 
@@ -337,8 +340,7 @@ class SyncPipeline(
 
   // last mirrored position per cursor, persisted across ticks — the
   // reference's cursorSet/cursorPositionSet (PulsarPartitionSyncWorker
-  // .java:158,174); the continuous-mode equivalent is the
-  // flatMapGroupsWithState state store (CursorSync.actions).
+  // .java:158,174), folded tick by tick through CursorSync.decidePure.
   private val cursorState =
     scala.collection.mutable.Map.empty[(String, Int, String), CursorState]
 
@@ -399,10 +401,10 @@ class SyncPipeline(
     * next to [[tickMetadata]]/[[syncCursors]].
     *
     * `srcMessages` is a BATCH snapshot of the source's message log
-    * (RawMessage schema) — `SourceCluster.messages` is the streaming
-    * frame the mirror consumes; the report wants the batch view the
-    * DSv2 connector also serves (`spark.read.format("pulsar-envelope")`,
-    * S-1 batch mode).
+    * (RawMessage schema) — the mirror streams the broker named by
+    * `SourceCluster.brokerName`; the report wants the batch view the
+    * DSv2 connector also serves (`spark.read.format("pulsar-envelope")`
+    * with that broker, S-1 batch mode).
     */
   def lagReport(srcMessages: DataFrame, offsetMap: DataFrame): DataFrame =
     SyncPipeline.lagReport(srcMessages, offsetMap)

@@ -252,44 +252,13 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
     assert(reported.asInstanceOf[EnvelopeOffset].positions(("c", 2)) == ((1L, 2L)))
   }
 
-  test("batch write: rows land on the broker, replays are MessageId-idempotent") {
-    import spark.implicits._
-    val broker = new InMemoryBroker
-    EnvelopeBrokerRegistry.register("es-write", broker)
-    val df = Seq(raw("w", 0, 1, 0), raw("w", 0, 1, 1), raw("w", 1, 2, 0)).toDF()
-    df.write.format(fmt).option("broker", "es-write").mode("append").save()
-    assert(broker.topicPartitions == Seq(("w", 0), ("w", 1)))
-    // replay the same frame: duplicate MessageIds are no-ops
-    df.write.format(fmt).option("broker", "es-write").mode("append").save()
-    val back = spark.read.format(fmt).option("broker", "es-write").load()
-    assert(back.count() == 3)
-  }
-
-  test("streaming round trip: DSv2 source to DSv2 sink, cross-broker") {
-    val a = new InMemoryBroker
-    val b = new InMemoryBroker
-    EnvelopeBrokerRegistry.register("es-rt-a", a)
-    EnvelopeBrokerRegistry.register("es-rt-b", b)
-    a.add(raw("r", 0, 1, 0), raw("r", 0, 1, 1), raw("r", 1, 1, 0))
-    val q = spark.readStream.format(fmt).option("broker", "es-rt-a").load()
-      .writeStream.format(fmt).option("broker", "es-rt-b")
-      .option("checkpointLocation", tmpDir("es-rt-ckpt"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.read.format(fmt).option("broker", "es-rt-b").load()
-      .select("topic", "partition", "ledgerId", "entryId")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got == Set(("r", 0, 1L, 0L), ("r", 0, 1L, 1L), ("r", 1, 1L, 0L)))
-  }
-
   test("end-to-end: MessageMirror drains the DSv2 source into a destination cluster") {
     val broker = new InMemoryBroker
     EnvelopeBrokerRegistry.register("es-e2e", broker)
     broker.add(raw("tp", 0, 5, 1), raw("tp", 0, 5, 2), raw("tp", 1, 5, 1))
     val sink = new InMemoryCluster("es-e2e-dst")
     sink.clear()
-    val src = spark.readStream.format(fmt).option("broker", "es-e2e").load()
-    val q = MessageMirror.start(src, sink, tmpDir("es-e2e-ckpt"),
+    val q = MessageMirror.start(spark, "es-e2e", sink, tmpDir("es-e2e-ckpt"),
       Trigger.AvailableNow()).start()
     q.awaitTermination()
     assert(sink.messages.map(m => (m.topic, m.partition, m.ledgerId, m.entryId)).toSet
@@ -297,7 +266,7 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
     // late messages: a second mirror run from the SAME checkpoint...
     // (fresh query, new checkpoint semantics differ; reuse checkpoint)
     broker.add(raw("tp", 0, 5, 3))
-    val q2 = MessageMirror.start(src, sink, tmpDir("es-e2e-ckpt2"),
+    val q2 = MessageMirror.start(spark, "es-e2e", sink, tmpDir("es-e2e-ckpt2"),
       Trigger.AvailableNow()).start()
     q2.awaitTermination()
     // replay through a fresh checkpoint re-reads everything; the

@@ -131,11 +131,9 @@ class SocketBrokerTCKSpec extends EnvelopeBrokerTCK
     try {
       EnvelopeBrokerRegistry.register("socket-e2e-src",
         new SocketBroker.Client("127.0.0.1", srcServer.boundPort))
-      val raw = spark.readStream.format("pulsar-envelope")
-        .option("broker", "socket-e2e-src").load()
       val sink = new SocketDestinationSink("127.0.0.1", dstServer.boundPort)
-      val q = MessageMirror.start(raw, sink, tmpDir("socket-mirror-ckpt"),
-        trigger = Trigger.AvailableNow()).start()
+      val q = MessageMirror.start(spark, "socket-e2e-src", sink,
+        tmpDir("socket-mirror-ckpt"), trigger = Trigger.AvailableNow()).start()
       assert(q.awaitTermination(600000L), "mirror drain timed out (loaded box?) — raise the wait, the plan did not fail")
 
       val got = dstBackend.topicPartitions.flatMap { case (t, p) =>
@@ -149,8 +147,8 @@ class SocketBrokerTCKSpec extends EnvelopeBrokerTCK
       }
       // a replayed epoch (second run over the same source) re-appends
       // harmlessly: MessageId dedup holds across the wire
-      val q2 = MessageMirror.start(raw, sink, tmpDir("socket-mirror-ckpt2"),
-        trigger = Trigger.AvailableNow()).start()
+      val q2 = MessageMirror.start(spark, "socket-e2e-src", sink,
+        tmpDir("socket-mirror-ckpt2"), trigger = Trigger.AvailableNow()).start()
       assert(q2.awaitTermination(600000L), "mirror drain timed out (loaded box?) — raise the wait, the plan did not fail")
       val again = dstBackend.topicPartitions.flatMap { case (t, p) =>
         dstBackend.read(t, p, (0L, 0L), dstBackend.latest(t, p))
@@ -217,15 +215,13 @@ class SocketBrokerTCKSpec extends EnvelopeBrokerTCK
     val server1 = bindSamePort(srcBackend, port)
     EnvelopeBrokerRegistry.register("socket-bounce-src",
       new SocketBroker.Client("127.0.0.1", port))
-    val raw = spark.readStream.format("pulsar-envelope")
-      .option("broker", "socket-bounce-src").load()
     val dstBackend = new InMemoryBroker
     val dstServer = new SocketBroker.Server(dstBackend)
     val sink = new SocketDestinationSink("127.0.0.1", dstServer.boundPort)
     val ckpt = java.nio.file.Files
       .createTempDirectory("socket-bounce-ckpt").toString
     try {
-      val q1 = MessageMirror.start(raw, sink, ckpt,
+      val q1 = MessageMirror.start(spark, "socket-bounce-src", sink, ckpt,
         trigger = Trigger.AvailableNow()).start()
       assert(q1.awaitTermination(600000L),
         "mirror drain timed out (loaded box?) — raise the wait, the plan did not fail")
@@ -242,7 +238,7 @@ class SocketBrokerTCKSpec extends EnvelopeBrokerTCK
       }
       val server2 = bindSamePort(new FileBroker(srcDir), port)
       try {
-        val q2 = MessageMirror.start(raw, sink, ckpt,
+        val q2 = MessageMirror.start(spark, "socket-bounce-src", sink, ckpt,
           trigger = Trigger.AvailableNow()).start()
         assert(q2.awaitTermination(600000L), "mirror drain timed out (loaded box?) — raise the wait, the plan did not fail")
         assert(mirrored() == (0L until 10L),

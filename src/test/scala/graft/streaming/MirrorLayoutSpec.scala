@@ -7,15 +7,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{DefaultParallelism, ListenerBusDrain}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
-import graft.SparkSuiteBase
-import graft.sources.{EnvelopeBrokerRegistry, EnvelopeSource, InMemoryBroker}
+import graft.{SparkEntry, SparkSuiteBase}
 
-/** How the mirror lays out a micro-batch: an envelope stream is
-  * published in the tasks that read it (no shuffle, one job per
-  * trigger), any other input is repartitioned and sorted first.
+/** How the mirror lays out a micro-batch: each source partition is
+  * published in the task that reads it (no shuffle, one job per
+  * trigger).
   */
 class MirrorLayoutSpec extends SparkSuiteBase {
 
@@ -50,13 +48,17 @@ class MirrorLayoutSpec extends SparkSuiteBase {
         shuffleWrite.get(key).addAndGet(m.shuffleWriteMetrics.bytesWritten)
       }
 
-    /** batch id → (jobs, tasks, shuffle-write bytes) of query `id`. */
-    def of(id: java.util.UUID): Map[Long, (Long, Long, Long)] = {
+    /** (query id, batch id) → (jobs, tasks, shuffle-write bytes). */
+    def all: Map[(String, Long), (Long, Long, Long)] = {
       ListenerBusDrain(spark.sparkContext)
-      jobs.asScala.collect { case ((q, b), n) if q == id.toString =>
-        b -> ((n.get, tasks.get((q, b)).get, shuffleWrite.get((q, b)).get))
+      jobs.asScala.map { case (key, n) =>
+        key -> ((n.get, tasks.get(key).get, shuffleWrite.get(key).get))
       }.toMap
     }
+
+    /** batch id → (jobs, tasks, shuffle-write bytes) of query `id`. */
+    def of(id: java.util.UUID): Map[Long, (Long, Long, Long)] =
+      all.collect { case ((q, b), v) if q == id.toString => b -> v }
   }
 
   private def withListener[T](body: BatchJobs => T): T = {
@@ -95,7 +97,7 @@ class MirrorLayoutSpec extends SparkSuiteBase {
     } yield msg(t, p, l, e)): _*)
 
     def run(checkpoint: String): Map[Long, (Long, Long, Long)] = withListener { l =>
-      val q = MessageMirror.start(src.messages, dst.sink, checkpoint,
+      val q = MessageMirror.start(spark, src.brokerName, dst.sink, checkpoint,
         Trigger.AvailableNow(), offsets = Some(rec)).start()
       q.awaitTermination()
       l.of(q.id)
@@ -146,8 +148,8 @@ class MirrorLayoutSpec extends SparkSuiteBase {
     } yield msg("k", p, 1L, e)): _*)
     val batches = DefaultParallelism.withValue(spark.sparkContext, 2) {
       withListener { l =>
-        val q = MessageMirror.start(src.messages, dst.sink, tmpDir("ml-pack-ckpt"),
-          Trigger.AvailableNow(), offsets = Some(rec)).start()
+        val q = MessageMirror.start(spark, src.brokerName, dst.sink,
+          tmpDir("ml-pack-ckpt"), Trigger.AvailableNow(), offsets = Some(rec)).start()
         q.awaitTermination()
         l.of(q.id)
       }
@@ -174,7 +176,7 @@ class MirrorLayoutSpec extends SparkSuiteBase {
     val ckpt = tmpDir("ml-dl-ckpt")
     src.addMessages((for (p <- 0 to 1; e <- 4L to 0L by -1L) yield msg("d", p, 1L, e)): _*)
     val sink = PoisonSink(dst, ("d", 1, 1L, 2L))
-    def run(): Unit = MessageMirror.start(src.messages, sink, ckpt,
+    def run(): Unit = MessageMirror.start(spark, src.brokerName, sink, ckpt,
       Trigger.AvailableNow(), deadLetter = Some(dl), offsets = Some(rec))
       .start().awaitTermination()
     try {
@@ -198,11 +200,12 @@ class MirrorLayoutSpec extends SparkSuiteBase {
     val rec = FileOffsetRecorder(s"$dstRoot/offsetmap")
     val ckpt = tmpDir("ml-fail-ckpt")
     src.addMessages((for (p <- 0 to 2; e <- 0L to 4L) yield msg("f", p, 1L, e)): _*)
-    val failing = MessageMirror.start(src.messages, PoisonSink(dst.sink, ("f", 1, 1L, 3L)),
-      ckpt, Trigger.AvailableNow(), offsets = Some(rec)).start()
+    val failing = MessageMirror.start(spark, src.brokerName,
+      PoisonSink(dst.sink, ("f", 1, 1L, 3L)), ckpt, Trigger.AvailableNow(),
+      offsets = Some(rec)).start()
     intercept[StreamingQueryException](failing.awaitTermination())
     assert(!new java.io.File(ckpt, "commits/0").exists)
-    MessageMirror.start(src.messages, dst.sink, ckpt,
+    MessageMirror.start(spark, src.brokerName, dst.sink, ckpt,
       Trigger.AvailableNow(), offsets = Some(rec)).start().awaitTermination()
     // each source message exactly once at the destination, in source
     // order at dense dst entries, each mapped once
@@ -217,43 +220,18 @@ class MirrorLayoutSpec extends SparkSuiteBase {
     assertRankOrder(rec.mappings)
   }
 
-  test("MemoryStream-fed mirror with partitions spread across tasks still shuffles and orders") {
-    import spark.implicits._
-    val name = s"ml-mem-${java.util.UUID.randomUUID()}"
-    val sink = new InMemoryCluster(name)
-    val rec = new InMemoryOffsetRecorder(name)
-    // three input partitions; every (topic, partition) lands in all of
-    // them, in descending (ledger, entry) order
-    val ms = MemoryStream[RawMessage](spark, 3)
-    ms.addData((for {
-      p <- 0 to 1
-      e <- 8L to 0L by -1L
-    } yield msg("m", p, 1L, e)): _*)
-    try {
-      val batches = withListener { l =>
-        val q = MessageMirror.start(ms.toDF(), sink, tmpDir("ml-mem-ckpt"),
-          Trigger.AvailableNow(), offsets = Some(rec)).start()
-        q.awaitTermination()
-        l.of(q.id)
-      }
-      assert(batches.values.map(_._3).sum > 0L, s"no shuffle: $batches")
-      assert(rec.mappings.size == 18)
-      assertRankOrder(rec.mappings)
-    } finally { sink.clear(); rec.clear() }
-  }
-
-  test("only an untransformed envelope stream is recognised as laid out") {
-    import spark.implicits._
-    val broker = new InMemoryBroker
-    EnvelopeBrokerRegistry.register("ml-layout", broker)
-    val stream = spark.readStream.format("pulsar-envelope")
-      .option("broker", "ml-layout").load()
-    assert(EnvelopeSource.isEnvelopeStream(stream))
-    assert(!EnvelopeSource.isEnvelopeStream(stream.filter("entryId > 0")))
-    assert(!EnvelopeSource.isEnvelopeStream(stream.repartition(2)))
-    assert(!EnvelopeSource.isEnvelopeStream(
-      spark.read.format("pulsar-envelope").option("broker", "ml-layout").load()))
-    assert(!EnvelopeSource.isEnvelopeStream(MemoryStream[RawMessage](spark, 1).toDF()))
+  test("q271 runs the deployed mirror path: no shuffle, one job per micro-batch") {
+    val batches = withListener { l =>
+      SparkEntry.queries("q271_mirror_e2e")(spark, sfDir)
+      l.all
+    }
+    // two ticks (first run, full replay from a fresh checkpoint), each
+    // of at least one data batch
+    assert(batches.keySet.map(_._1).size == 2, s"streaming queries: $batches")
+    batches.foreach { case ((q, b), (jobs, _, shuffled)) =>
+      assert(shuffled == 0L, s"query $q batch $b wrote $shuffled shuffle bytes")
+      assert(jobs == 1L, s"query $q batch $b ran $jobs jobs")
+    }
   }
 
   test("two attempts of one task publishing into a FileClusterSink stay in step") {

@@ -2,10 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSuiteBase
+import graft.sources.{EnvelopeBrokerRegistry, InMemoryBroker}
 
 /** Reference-equivalent E2E tests (SURVEY §5.2.2-3): metadata cascade
   * idempotency, envelope-preserving message backfill, at-least-once
@@ -82,16 +82,23 @@ class ReplicationSpec extends SparkSuiteBase {
       s"v-$ledger-$entry".getBytes("UTF-8"), key, eventTimeMs,
       publishTimeMillis = 1700000000000L + entry, properties = props)
 
+  /** A fresh source broker registered as `name`. */
+  private def broker(name: String): InMemoryBroker = {
+    val b = new InMemoryBroker
+    EnvelopeBrokerRegistry.register(name, b)
+    b
+  }
+
   test("message mirror: envelope rules, backfill, redelivery dedup") {
     val sink = new InMemoryCluster("mirror-test")
     sink.clear()
-    val ms = MemoryStream[RawMessage](spark, 1)
+    val src = broker("mirror-test-src")
     // pre-existing messages (Earliest backfill, PulsarMessageSyncTest.java:46)
-    ms.addData(
+    src.add(
       raw(0, 1, 1, key = "k1", eventTimeMs = 1700000000123L, props = Map("a" -> "b")),
       raw(0, 1, 2), // key null, eventTime 0 => both absent on dst
       raw(1, 1, 1, key = "x"))
-    val query = MessageMirror.start(ms.toDF(), sink, tmpDir("mirror-ckpt"),
+    val query = MessageMirror.start(spark, "mirror-test-src", sink, tmpDir("mirror-ckpt"),
       Trigger.AvailableNow()).start()
     query.awaitTermination()
 
@@ -105,10 +112,10 @@ class ReplicationSpec extends SparkSuiteBase {
     val m2 = msgs.find(m => m.partition == 0 && m.entryId == 2).get
     assert(m2.key.isEmpty && m2.eventTime.isEmpty)
 
-    // redelivery (at-least-once): same messages again + one new one
-    ms.addData(raw(0, 1, 1, key = "k1", eventTimeMs = 1700000000123L,
-      props = Map("a" -> "b")), raw(0, 1, 3))
-    val query2 = MessageMirror.start(ms.toDF(), sink, tmpDir("mirror-ckpt2"),
+    // redelivery (at-least-once): a fresh checkpoint re-reads every
+    // message from Earliest, plus one new one
+    src.add(raw(0, 1, 3))
+    val query2 = MessageMirror.start(spark, "mirror-test-src", sink, tmpDir("mirror-ckpt2"),
       Trigger.AvailableNow()).start()
     query2.awaitTermination()
     assert(sink.messages.size == 4) // dup absorbed, new one delivered
@@ -192,43 +199,37 @@ class ReplicationSpec extends SparkSuiteBase {
   }
 
   test("cursor state machine: create / skip / reset / dst-owned") {
-    implicit val s = spark
-    val ms = MemoryStream[TranslatedCursorStat](spark, 1)
-    val query = CursorSync.actions(ms.toDS())
-      .writeStream.format("memory").queryName("cursor_actions")
-      .outputMode("append").start()
-
     def stat(cursor: String, l: Long, e: Long, dstL: Long,
         active: Boolean = false, t: String = "2024-01-01 10:00:00") =
       TranslatedCursorStat("top", 0, cursor, l, e, Some(dstL), Some(0L),
         active, Timestamp.valueOf(t))
 
-    ms.addData(stat("c1", 1, 1, 101), stat("c2", 5, 0, 105))
-    query.processAllAvailable()
+    // one tick: fold each key's observations over its carried state
+    val state = scala.collection.mutable.Map.empty[(String, Int, String), CursorState]
+    val acts = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    def tick(stats: TranslatedCursorStat*): Unit =
+      stats.groupBy(s => (s.topic, s.partition, s.cursor)).toSeq.sortBy(_._1)
+        .foreach { case (key, ss) =>
+          val (out, next) = CursorSync.decidePure(key, state.get(key), ss)
+          next.foreach(state.update(key, _))
+          acts ++= out.map(a => (a.cursor, a.action))
+        }
+
+    tick(stat("c1", 1, 1, 101), stat("c2", 5, 0, 105))
     // first sighting: create
-    var acts = spark.table("cursor_actions")
-      .collect().map(r => (r.getAs[String]("cursor"), r.getAs[String]("action")))
     assert(acts.toSet == Set(("c1", "create"), ("c2", "create")))
 
     // unchanged -> skip; moved -> reset; moved-but-dst-active -> skip
-    ms.addData(
+    tick(
       stat("c1", 1, 1, 101, t = "2024-01-01 10:00:10"),
       stat("c2", 6, 0, 106, t = "2024-01-01 10:00:10"))
-    query.processAllAvailable()
-    ms.addData(stat("c2", 7, 0, 107, active = true, t = "2024-01-01 10:00:20"))
-    query.processAllAvailable()
-    acts = spark.table("cursor_actions")
-      .collect().map(r => (r.getAs[String]("cursor"), r.getAs[String]("action")))
+    tick(stat("c2", 7, 0, 107, active = true, t = "2024-01-01 10:00:20"))
     assert(acts.count(_ == ("c2", "reset")) == 1)
     assert(acts.count(_._1 == "c1") == 1) // no extra action for unchanged c1
 
     // dst-owned move updated state: moving again from (7,0) emits reset
-    ms.addData(stat("c2", 8, 0, 108, t = "2024-01-01 10:00:30"))
-    query.processAllAvailable()
-    acts = spark.table("cursor_actions")
-      .collect().map(r => (r.getAs[String]("cursor"), r.getAs[String]("action")))
+    tick(stat("c2", 8, 0, 108, t = "2024-01-01 10:00:30"))
     assert(acts.count(_ == ("c2", "reset")) == 2)
-    query.stop()
   }
 
   test("dead letter: one poisoned message doesn't abort siblings (A23)") {
@@ -242,9 +243,8 @@ class ReplicationSpec extends SparkSuiteBase {
         sink.publish(msg)
       }
     }
-    val ms = MemoryStream[RawMessage](spark, 1)
-    ms.addData(raw(0, 1, 1), raw(0, 1, 2), raw(0, 1, 3))
-    val query = MessageMirror.start(ms.toDF(), poisoned, tmpDir("dl-ckpt"),
+    broker("dl-src").add(raw(0, 1, 1), raw(0, 1, 2), raw(0, 1, 3))
+    val query = MessageMirror.start(spark, "dl-src", poisoned, tmpDir("dl-ckpt"),
       Trigger.AvailableNow(), deadLetter = Some(dl)).start()
     query.awaitTermination()
     assert(sink.messages.map(_.entryId).sorted == Seq(1L, 3L))

@@ -326,20 +326,21 @@ class StreamingSemanticsSpec extends SparkSuiteBase {
     val sink = new InMemoryCluster("ck-replay")
     sink.clear()
     val ckpt = tmpDir("ck-replay-ckpt")
-    val ms = MemoryStream[RawMessage](spark, 1)
-    ms.addData(RawMessage("t", "n", "tp", 0, 1, 1, "a".getBytes, null, 0L,
+    val broker = new graft.sources.InMemoryBroker
+    graft.sources.EnvelopeBrokerRegistry.register("ck-replay-src", broker)
+    broker.add(RawMessage("t", "n", "tp", 0, 1, 1, "a".getBytes, null, 0L,
       1700000000000L, Map.empty))
     // first run: sink poisoned -> batch fails -> offsets NOT committed
     val poisoned: DestinationSink = new DestinationSink {
       override def publish(msg: PulsarMessage): (Long, Long) =
         throw new RuntimeException("dst down")
     }
-    val q1 = MessageMirror.start(ms.toDF(), poisoned, ckpt).start()
+    val q1 = MessageMirror.start(spark, "ck-replay-src", poisoned, ckpt).start()
     intercept[Exception] { q1.awaitTermination() }
     assert(sink.messages.isEmpty)
     // restart with a healthy sink and the SAME checkpoint: the batch
     // replays (the ack never happened), message arrives exactly once
-    val q2 = MessageMirror.start(ms.toDF(), sink, ckpt).start()
+    val q2 = MessageMirror.start(spark, "ck-replay-src", sink, ckpt).start()
     q2.awaitTermination()
     assert(sink.messages.map(m => (m.ledgerId, m.entryId)) == Seq((1L, 1L)))
   }

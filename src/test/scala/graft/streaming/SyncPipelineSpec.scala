@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.SparkSuiteBase
+import graft.sources.{EnvelopeBrokerRegistry, InMemoryBroker}
 
 /** In-memory source/destination cluster fakes (the offline stand-in
   * for two live clusters, SURVEY §5.2.2).
@@ -24,13 +25,14 @@ class FakeSource(spark: SparkSession) extends SourceCluster {
     new java.util.concurrent.CopyOnWriteArrayList[TopicRow]().asScala
   val cursorRows: mutable.Buffer[CursorStat] =
     new java.util.concurrent.CopyOnWriteArrayList[CursorStat]().asScala
-  // messages must be a *streaming* frame (the mirror is a writeStream)
-  val messageStream =
-    org.apache.spark.sql.execution.streaming.runtime.MemoryStream[RawMessage](spark, 1)
+  // the message log: a broker of its own, registered under a unique name
+  val broker = new InMemoryBroker
+  private val ownBroker = s"fake-src-${java.util.UUID.randomUUID()}"
+  EnvelopeBrokerRegistry.register(ownBroker, broker)
+  def brokerName: String = ownBroker
   def tenants: DataFrame = tenantRows.toSeq.toDF()
   def namespaces: DataFrame = namespaceRows.toSeq.toDF()
   def topics: DataFrame = topicRows.toSeq.toDF()
-  def messages: DataFrame = messageStream.toDF()
   def cursorStats: DataFrame = cursorRows.toSeq.toDF()
 }
 
@@ -141,7 +143,7 @@ class SyncPipelineSpec extends SparkSuiteBase {
   test("message sync backfills pre-existing messages (PulsarMessageSyncTest analogue)") {
     val (src, dst, pipe) = freshPipeline("sp-msg")
     // message exists BEFORE the mirror starts (Earliest backfill)
-    src.messageStream.addData(RawMessage("public", "default", "tp", 0, 1, 0,
+    src.broker.add(RawMessage("public", "default", "tp", 0, 1, 0,
       "hello".getBytes("UTF-8"), null, 0L, 1700000000000L, Map.empty))
     val q = pipe.startMirror(tmpDir("sp-msg-ckpt"))
     q.awaitTermination()
@@ -174,7 +176,7 @@ class SyncPipelineSpec extends SparkSuiteBase {
     rec.clear()
     // mirror three messages on one partition
     (1L to 3L).foreach { e =>
-      src.messageStream.addData(RawMessage("t", "n", "tp", 0, 5, e,
+      src.broker.add(RawMessage("t", "n", "tp", 0, 5, e,
         s"m$e".getBytes("UTF-8"), null, 0L, 1700000000000L + e * 60000L, Map.empty))
     }
     val q = pipe.startMirror(tmpDir("sp-loop-ckpt"), offsets = Some(rec))
@@ -350,7 +352,7 @@ class SyncPipelineSpec extends SparkSuiteBase {
   test("supervised mirror restarts after a crash and drains (A20)") {
     FlakySinkState.reset("sp-supervise")
     val src = new FakeSource(spark)
-    src.messageStream.addData(RawMessage("t", "n", "tp", 0, 5, 1,
+    src.broker.add(RawMessage("t", "n", "tp", 0, 5, 1,
       "m1".getBytes("UTF-8"), null, 0L, 1700000000000L, Map.empty))
     val flakyDest = new FakeDest(spark, "sp-supervise-real") {
       override def sink: DestinationSink = new FlakyThenOkSink("sp-supervise", cluster)
@@ -369,17 +371,17 @@ class SyncPipelineSpec extends SparkSuiteBase {
   }
 
   test("closed loop over the DSv2 connector: mirror drains, offsets recorded, cursor translates") {
-    val broker = new graft.sources.InMemoryBroker
-    graft.sources.EnvelopeBrokerRegistry.register("sp-dsv2", broker)
+    // message plane = a broker registered under a caller-chosen name,
+    // read through the pulsar-envelope DataSource-V2 source; the rest
+    // of the cluster surface stays the fake admin
+    val broker = new InMemoryBroker
+    EnvelopeBrokerRegistry.register("sp-dsv2", broker)
     (1L to 3L).foreach { e =>
       broker.add(RawMessage("t", "n", "tp", 0, 5, e,
         s"m$e".getBytes("UTF-8"), null, 0L, 1700000000000L + e * 60000L, Map.empty))
     }
-    // message plane = the pulsar-envelope DataSource-V2 source; the
-    // rest of the cluster surface stays the fake admin
     val src = new FakeSource(spark) {
-      override def messages = spark.readStream.format("pulsar-envelope")
-        .option("broker", "sp-dsv2").load()
+      override def brokerName = "sp-dsv2"
     }
     val dst = new FakeDest(spark, "sp-dsv2-dst")
     val pipe = new SyncPipeline(spark, src, dst)
