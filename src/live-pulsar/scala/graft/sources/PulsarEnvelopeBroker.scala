@@ -41,14 +41,11 @@ import graft.streaming.RawMessage
   *     no-op (requires `brokerDeduplicationEnabled=true` on the
   *     destination namespace — the deployment prerequisite, same as
   *     the reference's implicit reliance on ack-after-write).
-  *  5. ADVANCE — overridden metadata-only: entry counts come from
-  *     admin `getInternalStats` ledger metadata, so admission-control
-  *     quota allocation never pulls payloads through the driver.
-  *  6. DISCOVERY — `topicPartitions` lists the namespace through the
+  *  5. DISCOVERY — `topicPartitions` lists the namespace through the
   *     admin API (physical `-partition-N` topics parsed back to
   *     (topic, index)); `latest` is monotonic because managed-ledger
   *     positions never move backwards.
-  *  7. CONCURRENCY — racing duplicate appends collapse broker-side
+  *  6. CONCURRENCY — racing duplicate appends collapse broker-side
   *     via the same producer-dedup sequence check.
   *
   * Certification: `src/live-pulsar-test` re-instantiates the TCK
@@ -114,8 +111,8 @@ class PulsarEnvelopeBroker(
       .startMessageIdInclusive() // clause 2: from-INCLUSIVE
       .create()
     new Iterator[RawMessage] {
-      private var nextMsg: Message[Array[Byte]] = advanceReader()
-      private def advanceReader(): Message[Array[Byte]] = {
+      private var nextMsg: Message[Array[Byte]] = pollReader()
+      private def pollReader(): Message[Array[Byte]] = {
         while (reader.hasMessageAvailable) {
           val m = reader.readNext(readTimeoutMs, TimeUnit.MILLISECONDS)
           if (m == null) { reader.close(); return null }
@@ -130,7 +127,7 @@ class PulsarEnvelopeBroker(
       override def hasNext: Boolean = nextMsg != null
       override def next(): RawMessage = {
         val m = nextMsg
-        nextMsg = advanceReader()
+        nextMsg = pollReader()
         val (l, e) = pos(m.getMessageId)
         val Array(tenant, ns) = namespace.split("/", 2)
         RawMessage(tenant, ns, topic, partition, l, e,
@@ -141,41 +138,6 @@ class PulsarEnvelopeBroker(
           m.getProperties.asScala.toMap)
       }
     }
-  }
-
-  /** Clause 5: metadata-only skip — ledger entry counts from
-    * getInternalStats bound the walk; only the final partial ledger
-    * needs no payloads either (entry ids are dense within a ledger).
-    */
-  override def advance(topic: String, partition: Int,
-      from: (Long, Long), until: (Long, Long), n: Long): ((Long, Long), Long) = {
-    val ord = Ordering[(Long, Long)]
-    if (n <= 0 || ord.gteq(from, until)) return (from, 0L)
-    val stats = admin.topics().getInternalStats(physical(topic, partition))
-    // ledgers sorted by id; currentLedger* fields cover the open one
-    val ledgers = stats.ledgers.asScala.toSeq.sortBy(_.ledgerId)
-      .map(l => (l.ledgerId, l.entries)) :+
-      (stats.currentLedgerEntries match {
-        case _ => (stats.lastConfirmedEntry.split(":")(0).toLong,
-          stats.currentLedgerEntries)
-      })
-    var cur = from
-    var skipped = 0L
-    ledgers.filter(_._2 > 0).foreach { case (lid, entries) =>
-      if (skipped < n && lid >= cur._1) {
-        val startEntry = if (lid == cur._1) cur._2 else 0L
-        val endEntry = // clamp to `until` inside its ledger
-          if (lid == until._1) math.min(entries, until._2) else entries
-        if (startEntry < endEntry) {
-          val take = math.min(endEntry - startEntry, n - skipped)
-          skipped += take
-          cur = (lid, startEntry + take)
-        } else if (lid > cur._1 && ord.lt(cur, until)) {
-          cur = (lid, 0L)
-        }
-      }
-    }
-    (ord.min(cur, until), skipped)
   }
 
   /** Clause 4: idempotent publish. Producer dedup needs (a) a stable

@@ -4,10 +4,12 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, FileAlreadyExistsException, Path, StandardCopyOption}
 import java.util.Base64
 
-/** The on-disk conventions shared by [[FileBroker]], [[SocketBroker]]'s
-  * wire protocol and `graft.streaming.FileCluster`: one name codec
-  * and one create discipline, so every file a durable root holds is
-  * written and read back the same way.
+import scala.jdk.CollectionConverters._
+
+/** The on-disk conventions shared by [[FileBroker]], the test-side
+  * `SocketBroker` wire protocol and `graft.streaming.FileCluster`: one
+  * name codec, one create discipline and one listing, so every file a
+  * durable root holds is written and read back the same way.
   */
 private[graft] object DurableFiles {
 
@@ -46,7 +48,21 @@ private[graft] object DurableFiles {
     }
   }
 
-  /** A fresh temp file in `d`: dot-prefixed, so listings skip it. */
+  /** The names in directory `d` (none when it does not exist), sorted;
+    * in-flight temp files (dot-prefixed, see [[tempFile]]) skipped.
+    * `Files.list` holds a directory fd until closed — a directory
+    * polled every micro-batch would leak fds without the try/finally.
+    */
+  def listNames(d: Path): Seq[String] =
+    if (!Files.isDirectory(d)) Seq.empty
+    else {
+      val s = Files.list(d)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")).toList.sorted
+      finally s.close()
+    }
+
+  /** A fresh temp file in `d`: dot-prefixed, so [[listNames]] skips it. */
   def tempFile(d: Path): Path = Files.createTempFile(d, ".w", ".tmp")
 
   /** Give the fully written temp file `tmp` the name `target` in the

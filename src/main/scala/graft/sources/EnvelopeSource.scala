@@ -73,10 +73,7 @@ class EnvelopeSource extends TableProvider with DataSourceRegister {
     val broker = opts.get("broker")
     require(broker != null && broker.nonEmpty,
       "option 'broker' (a registered EnvelopeBroker name) is required")
-    val maxRecords = Option(opts.get("maxRecordsPerMicroBatch")).map(_.toLong)
-    maxRecords.foreach(m => require(m > 0,
-      s"maxRecordsPerMicroBatch must be positive, got $m"))
-    new EnvelopeTable(broker, maxRecords)
+    new EnvelopeTable(broker)
   }
 }
 
@@ -100,12 +97,12 @@ object EnvelopeSource {
   * BINDING CONTRACT: any implementation must pass the conformance kit
   * (`graft.sources.EnvelopeBrokerTCK` in the test sources — extend it
   * with a `newBroker()` provisioning the real backend). The TCK pins
-  * the six clauses the replication pipeline leans on: per-partition
+  * the clauses the replication pipeline leans on: per-partition
   * (ledger, entry) order, inclusive/exclusive range semantics,
-  * side-effect-free replayable reads, MessageId-idempotent append,
-  * read-consistent `advance`, and partition discovery with monotonic
-  * `latest`. Passing it is the drop-in criterion for replacing
-  * [[InMemoryBroker]] with a live transport.
+  * side-effect-free replayable reads, MessageId-idempotent append
+  * (also under racing appenders), and partition discovery with
+  * monotonic `latest`. Passing it is the drop-in criterion for
+  * replacing [[InMemoryBroker]] with a live transport.
   */
 trait EnvelopeBroker {
   def topicPartitions: Seq[(String, Int)]
@@ -113,26 +110,6 @@ trait EnvelopeBroker {
   def read(topic: String, partition: Int,
       from: (Long, Long), until: (Long, Long)): Iterator[RawMessage]
   def latest(topic: String, partition: Int): (Long, Long)
-
-  /** Position after skipping at most `n` messages forward from `from`
-    * (never past `until`), plus how many were skipped. Used by
-    * admission control on the DRIVER — the default walks `read`, which
-    * is fine in-memory but pulls payloads through the driver on a live
-    * transport; a real implementation should override with a
-    * metadata-only seek (e.g. ledger entry counts).
-    */
-  def advance(topic: String, partition: Int,
-      from: (Long, Long), until: (Long, Long), n: Long): ((Long, Long), Long) = {
-    val it = read(topic, partition, from, until)
-    var last = from
-    var skipped = 0L
-    while (it.hasNext && skipped < n) {
-      val m = it.next()
-      last = (m.ledgerId, m.entryId + 1)
-      skipped += 1
-    }
-    (last, skipped)
-  }
 }
 
 /** JVM-wide broker registry (valid under local[*], where executors
@@ -203,9 +180,7 @@ class InMemoryBroker extends EnvelopeBroker with WritableEnvelopeBroker {
   }
 }
 
-private[sources] class EnvelopeTable(
-    brokerName: String,
-    maxRecordsPerMicroBatch: Option[Long] = None)
+private[sources] class EnvelopeTable(brokerName: String)
     extends Table with SupportsRead {
 
   override def name(): String = s"pulsar-envelope($brokerName)"
@@ -214,7 +189,7 @@ private[sources] class EnvelopeTable(
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EnvelopeScanBuilder(brokerName, maxRecordsPerMicroBatch)
+    new EnvelopeScanBuilder(brokerName)
 }
 
 /** Column pruning (SupportsPushDownRequiredColumns): a projection-only
@@ -222,21 +197,18 @@ private[sources] class EnvelopeTable(
   * scan whose readers emit just those fields — the payload bytes never
   * leave the reader.
   */
-private[sources] class EnvelopeScanBuilder(
-    brokerName: String,
-    maxRecordsPerMicroBatch: Option[Long])
+private[sources] class EnvelopeScanBuilder(brokerName: String)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
   private var required: StructType = EnvelopeSource.schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   override def build(): Scan =
-    new EnvelopeScan(brokerName, maxRecordsPerMicroBatch, required)
+    new EnvelopeScan(brokerName, required)
 }
 
 private[sources] class EnvelopeScan(
     brokerName: String,
-    maxRecordsPerMicroBatch: Option[Long] = None,
     required: StructType = EnvelopeSource.schema) extends Scan {
   override def readSchema(): StructType = required
   override def description(): String = s"pulsar-envelope($brokerName)"
@@ -258,7 +230,7 @@ private[sources] class EnvelopeScan(
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new EnvelopeMicroBatchStream(brokerName, maxRecordsPerMicroBatch, required)
+    new EnvelopeMicroBatchStream(brokerName, required)
 }
 
 /** Streaming offsets: per-partition exclusive end positions. Wire
@@ -290,31 +262,39 @@ private[sources] object EnvelopeOffset {
   * per partition. Partitions that appear on the broker AFTER the
   * stream started are picked up by the next `latestOffset` call with
   * an implicit (0,0) start — the reference's partition-discovery
-  * behavior (A13/A21).
-  *
-  * Admission control: with `maxRecordsPerMicroBatch` set, each batch
-  * admits at most that many records (greedy in partition order) — the
-  * knob that chunks a huge Earliest backfill into bounded batches
-  * instead of one giant catch-up batch (at 100 TB the difference
-  * between steady progress + checkpoints and a week-long batch that
-  * can only fail whole).
+  * behavior (A13/A21). Like the reference's consumer, a batch reads
+  * everything available: there is no per-batch budget, and the read
+  * limit Spark passes is ignored. `SupportsAdmissionControl` is
+  * implemented for the checkpointed start that
+  * `latestOffset(start, limit)` receives: it floors every partition's
+  * end, also for a partition the listing misses, and the live
+  * positions that call lists answer `reportLatestOffset`.
   */
 private[sources] class EnvelopeMicroBatchStream(
     brokerName: String,
-    maxRecordsPerMicroBatch: Option[Long] = None,
     required: StructType = EnvelopeSource.schema)
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
+  import org.apache.spark.sql.connector.read.streaming.ReadLimit
 
   private def broker = EnvelopeBrokerRegistry.get(brokerName)
 
   // AvailableNow: the end captured at stream start; batches never read
-  // past it even if the broker keeps growing. Implemented here (not
-  // via Spark's wrapper) because the wrapper does not forward the
-  // source's default read limit — admission control would silently
-  // turn off under AvailableNow.
+  // past it even if the broker keeps growing. The source implements
+  // the trigger itself because each of Spark 4.1.2's two fallbacks for
+  // a source that does not loses data or replays it:
+  //  - by default the query runs ONE batch, so a run that starts with
+  //    an uncommitted batch (an earlier run failed) replays that batch
+  //    and stops without reading what arrived since;
+  //  - with the session-wide spark.sql.streaming.
+  //    triggerAvailableNowWrapper.enabled, `AvailableNowDataStreamWrapper`
+  //    captures `latestOffset(initialOffset, allAvailable)` once and
+  //    returns it for every batch, so a checkpointed partition the
+  //    listing misses at capture drops out of the committed offset and
+  //    the next run replays it from (0,0).
+  // Here the capture only caps each batch's end; the floor at the
+  // checkpointed start holds.
   @volatile private var availableNowEnd: Option[Map[(String, Int), (Long, Long)]] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
@@ -327,9 +307,6 @@ private[sources] class EnvelopeMicroBatchStream(
     EnvelopeOffset(broker.topicPartitions.map { case (t, p) =>
       ((t, p), broker.latest(t, p))
     }.toMap)
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxRecordsPerMicroBatch.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
 
   // the live positions the last `latestOffset(start, limit)` listed:
   // Spark asks for them right after that call, and a second listing
@@ -345,11 +322,9 @@ private[sources] class EnvelopeMicroBatchStream(
     // checkpointed start's keys: checkpointed positions must never
     // drop out of the offset map just because the broker listing
     // momentarily misses the partition
-    val allTps = {
-      val listed = broker.topicPartitions
-      listed ++ start.keys.filterNot(listed.toSet).toSeq.sorted
-    }
-    val live = allTps.map(tp => tp -> broker.latest(tp._1, tp._2)).toMap
+    val listed = broker.topicPartitions
+    val live = (listed ++ start.keys.filterNot(listed.toSet).toSeq.sorted)
+      .map { case (t, p) => (t, p) -> broker.latest(t, p) }.toMap
     lastLive = EnvelopeOffset(live)
     // per-partition end: broker latest, clamped to the AvailableNow
     // capture (partitions discovered after the capture wait for the
@@ -358,47 +333,11 @@ private[sources] class EnvelopeMicroBatchStream(
     // recreation on a live transport) reports latest (0,0); without
     // the floor its checkpointed position would be overwritten and a
     // reappearing partition would silently replay its full history.
-    def endFor(t: String, p: Int, s: (Long, Long)): (Long, Long) = {
-      val capped = availableNowEnd match {
-        case Some(cap) => ord.min(live((t, p)), cap.getOrElse((t, p), s))
-        case None => live((t, p))
-      }
-      ord.max(capped, s)
-    }
-    limit match {
-      case mr: ReadMaxRows =>
-        // FAIR allocation: an even per-partition quota first, then a
-        // greedy sweep for the leftover — a purely greedy partition-
-        // order allocation would let one deep partition starve the
-        // rest for the whole backfill (skewed progress, lagging cursor
-        // translation for the starved partitions). Live brokers
-        // override advance with a metadata-only seek so no payload
-        // crosses the driver here.
-        val tps = allTps
-        val ends = scala.collection.mutable.LinkedHashMap(
-          tps.map(tp => tp -> start.getOrElse(tp, (0L, 0L))): _*)
-        var remaining = mr.maxRows()
-        val quota = math.max(1L, remaining / math.max(1, tps.size))
-        var pass = 0
-        while (pass < 2 && remaining > 0) {
-          tps.foreach { case (t, p) =>
-            if (remaining > 0) {
-              val here = if (pass == 0) math.min(quota, remaining) else remaining
-              val s = ends((t, p))
-              val (last, n) = broker.advance(t, p, s, endFor(t, p, s), here)
-              ends((t, p)) = last
-              remaining -= n
-            }
-          }
-          pass += 1
-        }
-        EnvelopeOffset(ends.toMap)
-      case _ =>
-        EnvelopeOffset(allTps.map { case (t, p) =>
-          val s = start.getOrElse((t, p), (0L, 0L))
-          ((t, p), endFor(t, p, s))
-        }.toMap)
-    }
+    EnvelopeOffset(live.map { case (tp, l) =>
+      val s = start.getOrElse(tp, (0L, 0L))
+      val capped = availableNowEnd.fold(l)(cap => ord.min(l, cap.getOrElse(tp, s)))
+      tp -> ord.max(capped, s)
+    })
   }
 
   override def deserializeOffset(json: String): Offset =

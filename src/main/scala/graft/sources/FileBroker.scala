@@ -4,13 +4,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.Base64
 
-import scala.jdk.CollectionConverters._
-
 import graft.streaming.RawMessage
 
 /** Message codec shared by the durable [[FileBroker]] (one file per
-  * message) and the [[SocketBroker]] wire protocol (one frame per
-  * message): base64 fields, one per line, fixed order — no JSON
+  * message) and the test-side `SocketBroker` wire protocol (one frame
+  * per message): base64 fields, one per line, fixed order — no JSON
   * library dependency, arbitrary topic names and binary payloads
   * safe.
   */
@@ -56,9 +54,6 @@ private[sources] object RawMessageCodec {
   *   - IDEMPOTENCE: the atomic move REFUSES to replace an existing
   *     target — first append wins, replays are no-ops, and a reader
   *     never observes a half-written file.
-  *   - ADVANCE: inherited metadata-only-ish default (file listing,
-  *     payload decode only for skipped messages via read — acceptable
-  *     for a local filesystem; a remote binding overrides).
   *
   * Local[*] scope like the registry itself: executors resolve the
   * broker by name from [[EnvelopeBrokerRegistry]] and share the
@@ -66,7 +61,7 @@ private[sources] object RawMessageCodec {
   * creates follow [[DurableFiles]].
   */
 class FileBroker(rootDir: String) extends EnvelopeBroker with WritableEnvelopeBroker {
-  import DurableFiles.{dec, enc}
+  import DurableFiles.{dec, enc, listNames}
 
   private val root: Path = {
     val p = Paths.get(rootDir)
@@ -83,16 +78,6 @@ class FileBroker(rootDir: String) extends EnvelopeBroker with WritableEnvelopeBr
     DurableFiles.createFile(dir, s"${m.ledgerId}-${m.entryId}",
       RawMessageCodec.serialize(m))
   }
-
-  // Files.list streams hold a directory fd until closed — a broker
-  // polled every micro-batch would leak fds without the try/finally
-  private def listNames(dir: Path): Seq[String] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString).toList
-      finally s.close()
-    }
 
   // Foreign directories under the root (tooling leftovers, editors) must
   // not break discovery: skip any name whose suffix isn't numeric or whose
@@ -111,7 +96,6 @@ class FileBroker(rootDir: String) extends EnvelopeBroker with WritableEnvelopeBr
 
   private def listPositions(topic: String, partition: Int): Seq[(Long, Long)] =
     listNames(partDir(topic, partition))
-      .filterNot(_.startsWith(".")) // in-flight temp files
       .flatMap { n =>
         n.split("-", 2) match {
           case Array(l, e) =>

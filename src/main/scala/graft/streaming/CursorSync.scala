@@ -31,22 +31,32 @@ object OffsetIndex {
     * deterministic). Tie-break inside a minute: smallest
     * (srcLedger, srcEntry).
     */
-  def sparseSample(offsetMap: DataFrame, retentionMinutes: Int = 60): DataFrame = {
-    val minuteCol = date_trunc("minute", col("recordedTs"))
-    val w = Window
-      .partitionBy(col("topic"), col("partition"), minuteCol)
-      .orderBy(col("recordedTs"), col("srcLedger"), col("srcEntry"))
-    val wMax = Window.partitionBy(col("topic"), col("partition"))
-    // retention FIRST, then pick each minute's representative among
-    // the surviving rows — the other order silently drops a whole
-    // minute whose first sample is just outside retention even though
-    // later samples in that minute are inside it
+  def sparseSample(offsetMap: DataFrame, retentionMinutes: Int = 60): DataFrame =
+    firstPerMinute(retained(offsetMap, retentionMinutes))
+
+  /** The rows of `offsetMap` within `retentionMinutes` of the newest
+    * sample of their (topic, partition) — the one retention rule both
+    * translation tiers share.
+    */
+  private def retained(offsetMap: DataFrame, retentionMinutes: Int): DataFrame =
     offsetMap
-      .withColumn("__maxTs", max(col("recordedTs")).over(wMax))
+      .withColumn("__maxTs",
+        max(col("recordedTs")).over(Window.partitionBy(col("topic"), col("partition"))))
       .filter(col("recordedTs") >= col("__maxTs") - expr(s"INTERVAL $retentionMinutes MINUTE"))
-      .withColumn("__rn", row_number().over(w))
+      .drop("__maxTs")
+
+  /** Each (topic, partition, minute)'s first mapping. Applied AFTER
+    * retention: the other order silently drops a whole minute whose
+    * first sample is just outside retention even though later samples
+    * in that minute are inside it.
+    */
+  private def firstPerMinute(rows: DataFrame): DataFrame = {
+    val w = Window
+      .partitionBy(col("topic"), col("partition"), date_trunc("minute", col("recordedTs")))
+      .orderBy(col("recordedTs"), col("srcLedger"), col("srcEntry"))
+    rows.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
-      .drop("__rn", "__maxTs")
+      .drop("__rn")
   }
 
   /** A17: translate each cursor observation to the greatest indexed
@@ -68,11 +78,12 @@ object OffsetIndex {
 
   /** Two-tier translation, matching the reference's lookup order
     * (`PulsarPartitionSyncWorker.java:211-218`): an EXACT hit against
-    * the full offset map first (the reference's dense 1-minute
-    * `messageIdMap` cache — here the whole recorded map, a strict
+    * the retained offset map first (the reference's dense 1-minute
+    * `messageIdMap` cache — here every mapping within retention, a
     * superset of the reference's TTL'd tier), falling back to the
-    * sparse floor sample only when the cursor sits on a message the
-    * map never recorded. Without the dense tier, a cursor at a
+    * sparse floor sample (the first-per-minute rows of that same
+    * retained map) only when the cursor sits on a message the map
+    * never recorded. Without the dense tier, a cursor at a
     * just-copied message resolves to its minute's FIRST sample — up to
     * a minute early, extra redelivery after subscription create/reset.
     *
@@ -82,22 +93,14 @@ object OffsetIndex {
   def translateTwoTier(
       cursorStats: DataFrame,
       offsetMap: DataFrame,
-      retentionMinutes: Int = 60,
-      denseRetentionMinutes: Int = 60): DataFrame = {
-    val sparse = translate(cursorStats, sparseSample(offsetMap, retentionMinutes))
-      .alias("s")
-    // bound the dense build side with the same event-time-relative
-    // retention rule as the sparse tier — the reference TTLs its dense
+      retentionMinutes: Int = 60): DataFrame = {
+    // one retention rule for both tiers: the reference TTLs its dense
     // cache at 1 minute purely for heap reasons
     // (PulsarPartitionSyncWorker.java:71-72); here the bound exists so
-    // the exact-match join's build side cannot grow with total stream
-    // history at scale (wider default: an equi-join is indifferent to
-    // window width, fidelity isn't)
-    val wMax = Window.partitionBy(col("topic"), col("partition"))
-    val dense = offsetMap
-      .withColumn("__maxTs", max(col("recordedTs")).over(wMax))
-      .filter(col("recordedTs") >=
-        col("__maxTs") - expr(s"INTERVAL $denseRetentionMinutes MINUTE"))
+    // neither tier's build side can grow with total stream history
+    val kept = retained(offsetMap, retentionMinutes)
+    val sparse = translate(cursorStats, firstPerMinute(kept)).alias("s")
+    val dense = kept
       .select(col("topic"), col("partition"),
         col("srcLedger"), col("srcEntry"),
         col("dstLedger").as("__denseL"), col("dstEntry").as("__denseE"))

@@ -3,12 +3,10 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.{EnvelopeBrokerRegistry, FileBroker}
-import graft.sources.DurableFiles.{createFile, dec, decProps, enc, encProps}
+import graft.sources.DurableFiles.{createFile, dec, decProps, enc, encProps, listNames}
 
 /** Durable file-backed cluster — the deployable offline backend for
   * [[graft.SyncMain]], playing BOTH roles of the reference's two
@@ -198,18 +196,6 @@ object FileCluster {
   private def splitCsv(s: String): Seq[String] =
     if (s.isEmpty) Seq.empty else s.split(",", -1).toSeq
 
-  /** File names under `d`, sorted for deterministic frames; in-flight
-    * temp files (dot-prefixed) skipped.
-    */
-  private[streaming] def listNames(d: Path): Seq[String] =
-    if (!Files.isDirectory(d)) Seq.empty
-    else {
-      val s = Files.list(d)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filterNot(_.startsWith(".")).toList.sorted
-      finally s.close()
-    }
-
   /** (fileName, body) pairs of [[listNames]]. */
   private[streaming] def listFiles(d: Path): Seq[(String, String)] =
     listNames(d).map(n => n -> new String(Files.readAllBytes(d.resolve(n)), UTF_8))
@@ -304,15 +290,8 @@ case class FileOffsetRecorder(rootDir: String) extends OffsetRecorder {
       s"${m.dstLedger}\n${m.dstEntry}\n${m.recordedTs.getTime}".getBytes(UTF_8))
   }
 
-  def mappings: Seq[OffsetMapping] = {
-    val partDirs =
-      if (!Files.isDirectory(dir)) Seq.empty[Path]
-      else {
-        val s = Files.list(dir)
-        try s.iterator().asScala.filter(Files.isDirectory(_)).toList
-        finally s.close()
-      }
-    partDirs.flatMap { pd =>
+  def mappings: Seq[OffsetMapping] =
+    listNames(dir).map(dir.resolve).filter(Files.isDirectory(_)).flatMap { pd =>
       val Array(topic, part) = pd.getFileName.toString.split("__", 2)
       listFiles(pd).map { case (name, body) =>
         val Array(l, e) = name.split("-", 2)
@@ -322,7 +301,6 @@ case class FileOffsetRecorder(rootDir: String) extends OffsetRecorder {
           new java.sql.Timestamp(lines(2).toLong))
       }
     }.sortBy(m => (m.topic, m.partition, m.srcLedger, m.srcEntry))
-  }
 
   def toDF(spark: SparkSession): DataFrame =
     spark.createDataFrame(mappings)

@@ -375,6 +375,13 @@ class SyncPipeline(
     actions.foreach(dest.applyCursorAction)
     actions
   }
+}
+
+/** Pure (instance-state-free) pieces of the pipeline, callable without
+  * constructing clusters — the oracle gate (q264) runs [[lagReport]]
+  * over a deterministic events-derived feed this way.
+  */
+object SyncPipeline {
 
   /** Replication LAG report — the monitoring surface the reference
     * never had (its only signal is its log lines): per
@@ -398,7 +405,7 @@ class SyncPipeline(
     * Scale shape: two map-side-combinable count/max aggregates (one
     * per side) joined on (topic, partition) — partition-count-sized
     * output, no message-level co-shuffle. Run it from any scheduler
-    * next to [[tickMetadata]]/[[syncCursors]].
+    * next to [[SyncPipeline!.tickMetadata]]/[[SyncPipeline!.syncCursors]].
     *
     * `srcMessages` is a BATCH snapshot of the source's message log
     * (RawMessage schema) — the mirror streams the broker named by
@@ -406,17 +413,6 @@ class SyncPipeline(
     * DSv2 connector also serves (`spark.read.format("pulsar-envelope")`
     * with that broker, S-1 batch mode).
     */
-  def lagReport(srcMessages: DataFrame, offsetMap: DataFrame): DataFrame =
-    SyncPipeline.lagReport(srcMessages, offsetMap)
-}
-
-/** Pure (instance-state-free) pieces of the pipeline, callable without
-  * constructing clusters — the oracle gate (q264) replays [[lagReport]]
-  * over a deterministic events-derived feed this way.
-  */
-object SyncPipeline {
-
-  /** See [[SyncPipeline!.lagReport]] — the aggregation itself. */
   def lagReport(srcMessages: DataFrame, offsetMap: DataFrame): DataFrame = {
     val srcAgg = srcMessages
       .groupBy(col("topic"), col("partition"))

@@ -7,8 +7,8 @@ import graft.streaming.RawMessage
 /** Broker-contract conformance kit (TCK): the guarantees every
   * [[EnvelopeBroker]] + [[WritableEnvelopeBroker]] implementation must
   * honor for the replication pipeline to be correct. The DSv2
-  * connector, the mirror's effectively-once upgrade, and the
-  * admission-control offset math each lean on a specific clause:
+  * connector's offsets and the mirror's effectively-once upgrade each
+  * lean on a specific clause:
   *
   *   1. ORDER   — `read` yields (ledgerId, entryId)-ascending rows;
   *                per-partition order is the reference's consumer
@@ -27,12 +27,11 @@ import graft.streaming.RawMessage
   *                (topic, partition, ledgerId, entryId): replayed
   *                streaming epochs re-append harmlessly (the
   *                at-least-once → effectively-once upgrade).
-  *   5. ADVANCE — `advance(from, until, n)` lands exactly n rows
-  *                forward (or at `until` if fewer remain) and agrees
-  *                with `read`; the driver's fair admission-control
-  *                quota allocation is built on it.
-  *   6. DISCOVERY — `topicPartitions` lists every partition with data;
+  *   5. DISCOVERY — `topicPartitions` lists every partition with data;
   *                `latest` never moves backwards as data arrives.
+  *   6. CONCURRENCY — racing duplicate appends leave exactly one
+  *                immutable row per MessageId (replayed epochs race
+  *                live writers on a real transport).
   *
   * A live transport binding extends this suite with a `newBroker()`
   * that provisions its real backend; passing the TCK is the drop-in
@@ -120,27 +119,6 @@ trait EnvelopeBrokerTCK extends AnyFunSuite {
     assert(rows.size == 1, "MessageId dedup must collapse replays")
     assert(new String(rows.head.value, "UTF-8") == "original",
       "a replayed append must not overwrite the committed payload")
-  }
-
-  test(s"[$brokerName] ADVANCE: agrees with read, never passes until, composes") {
-    val b = newBroker()
-    (0L until 9L).foreach(e => b.append(msg("a", 0, e / 3, e % 3)))
-    val end = b.latest("a", 0)
-    // advancing by n lands exactly n rows forward
-    val (p3, n3) = b.advance("a", 0, (0L, 0L), end, 3L)
-    assert(n3 == 3L)
-    assert(positions(b, "a", 0, until = p3).size == 3)
-    // composition: 3 then 3 equals 6 in one step
-    val (p6a, _) = b.advance("a", 0, p3, end, 3L)
-    val (p6b, n6) = b.advance("a", 0, (0L, 0L), end, 6L)
-    assert(n6 == 6L)
-    assert(positions(b, "a", 0, until = p6a) == positions(b, "a", 0, until = p6b))
-    // over-asking clamps at until with the true remaining count
-    val (pAll, nAll) = b.advance("a", 0, (0L, 0L), end, 100L)
-    assert(nAll == 9L)
-    assert(positions(b, "a", 0, from = pAll, until = end).isEmpty)
-    // zero skip is a no-op
-    assert(b.advance("a", 0, (1L, 1L), end, 0L)._2 == 0L)
   }
 
   test(s"[$brokerName] CONCURRENCY: racing duplicate appends yield exactly one row per MessageId") {

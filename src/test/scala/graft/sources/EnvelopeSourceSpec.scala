@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.connector.read.streaming.Offset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -68,30 +69,34 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
     assert(n == 1)
   }
 
+  /** One drain = a fresh AvailableNow query against the checkpoint
+    * `ckpt` (the memory sink refuses checkpoint recovery, so the
+    * collector is a foreachBatch into a JVM-wide buffer); the
+    * (topic, partition, ledgerId, entryId) rows it read.
+    */
+  private def drain(brokerName: String, ckpt: String): Seq[(String, Int, Long, Long)] = {
+    EnvelopeSourceSpec.drained.clear()
+    val q = spark.readStream.format(fmt).option("broker", brokerName).load()
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        batch.select("topic", "partition", "ledgerId", "entryId").collect()
+          .foreach(r => EnvelopeSourceSpec.drained.add(
+            (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3))))
+      }
+      .start()
+    q.awaitTermination()
+    import scala.jdk.CollectionConverters._
+    EnvelopeSourceSpec.drained.asScala.toSeq
+  }
+
   test("streaming: checkpointed offsets resume exactly where the last run stopped") {
     val broker = new InMemoryBroker
     EnvelopeBrokerRegistry.register("es-stream", broker)
     broker.add(raw("s", 0, 1, 0), raw("s", 0, 1, 1))
     val ckpt = tmpDir("es-stream-ckpt")
-
-    // one drain = a fresh AvailableNow query against the SAME
-    // checkpoint (the memory sink refuses checkpoint recovery, so the
-    // collector is a foreachBatch into a JVM-wide buffer)
-    def drainCount(): Long = {
-      EnvelopeSourceSpec.drained.clear()
-      val q = spark.readStream.format(fmt).option("broker", "es-stream").load()
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.select("topic", "partition", "ledgerId", "entryId").collect()
-            .foreach(r => EnvelopeSourceSpec.drained.add(
-              (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3))))
-        }
-        .start()
-      q.awaitTermination()
-      EnvelopeSourceSpec.drained.size().toLong
-    }
+    def drainCount(): Long = drain("es-stream", ckpt).size.toLong
     assert(drainCount() == 2)
     // new messages + a NEW partition appear after the first run: the
     // next run reads ONLY the delta (offsets came from the checkpoint)
@@ -115,58 +120,6 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
     assert(perPart.head == perPart.head.sorted)
   }
 
-  test("admission control: maxRecordsPerMicroBatch chunks the backfill into bounded batches") {
-    val broker = new InMemoryBroker
-    EnvelopeBrokerRegistry.register("es-limit", broker)
-    (0L until 5L).foreach(e => broker.add(raw("l", 0, 1, e)))
-    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val q = spark.readStream.format(fmt)
-      .option("broker", "es-limit")
-      .option("maxRecordsPerMicroBatch", "2").load()
-      .writeStream
-      .option("checkpointLocation", tmpDir("es-limit-ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val n = batch.count()
-        if (n > 0) sizes.add(n): Unit
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    val got = sizes.asScala.toSeq
-    assert(got.sum == 5, s"all messages must arrive, got $got")
-    assert(got.forall(_ <= 2), s"every batch must respect the limit, got $got")
-    assert(got.length >= 3, s"the backfill must be chunked, got $got")
-  }
-
-  test("admission control allocates the batch budget fairly across partitions") {
-    val broker = new InMemoryBroker
-    EnvelopeBrokerRegistry.register("es-fair", broker)
-    // two equally deep partitions; a greedy allocator would spend the
-    // whole first batch on partition 0
-    (0L until 4L).foreach { e =>
-      broker.add(raw("f", 0, 1, e)); broker.add(raw("f", 1, 1, e))
-    }
-    val firstBatch = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-    val q = spark.readStream.format(fmt)
-      .option("broker", "es-fair")
-      .option("maxRecordsPerMicroBatch", "4").load()
-      .writeStream
-      .option("checkpointLocation", tmpDir("es-fair-ckpt"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        if (id == 0)
-          batch.select("partition", "entryId").collect()
-            .foreach(r => firstBatch.add((r.getInt(0), r.getLong(1)))): Unit
-      }
-      .start()
-    q.awaitTermination()
-    import scala.jdk.CollectionConverters._
-    val byPartition = firstBatch.asScala.toSeq.groupBy(_._1).view.mapValues(_.size).toMap
-    // batch 0 carries 2 messages from EACH partition, not 4 from one
-    assert(byPartition == Map(0 -> 2, 1 -> 2), s"unfair first batch: $byPartition")
-  }
-
   test("a partition transiently absent from the broker listing keeps its checkpointed position") {
     val inner = new InMemoryBroker
     inner.add(raw("tp", 0, 1, 0), raw("tp", 0, 1, 1), raw("tp", 1, 1, 0))
@@ -184,7 +137,7 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
         else inner.latest(topic, partition)
     }
     EnvelopeBrokerRegistry.register("flaky-listing", flaky)
-    val stream = new EnvelopeMicroBatchStream("flaky-listing", None)
+    val stream = new EnvelopeMicroBatchStream("flaky-listing")
     val start = stream.latestOffset().asInstanceOf[EnvelopeOffset]
     assert(start.positions(("tp", 1)) == ((1L, 1L)))
     hide = true
@@ -207,6 +160,83 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
       .flatMap(_.asInstanceOf[EnvelopeInputPartition].ranges).toSeq
     assert(planned == Seq(EnvelopeRange("tp", 0, 1L, 2L, 1L, 3L)),
       s"reappearing partition must not replay history: $planned")
+  }
+
+  test("AvailableNow: the capture at prepare bounds every batch; later appends and partitions wait") {
+    val broker = new InMemoryBroker
+    EnvelopeBrokerRegistry.register("es-capture", broker)
+    broker.add(raw("n", 0, 1, 0), raw("n", 0, 1, 1))
+    val stream = new EnvelopeMicroBatchStream("es-capture")
+    stream.prepareForTriggerAvailableNow()
+    // after the capture: one more message on (n,0) and a new partition
+    broker.add(raw("n", 0, 1, 2), raw("n", 1, 1, 0))
+    val all = org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()
+    def planned(s: Offset, e: Offset) = stream.planInputPartitions(s, e)
+      .flatMap(_.asInstanceOf[EnvelopeInputPartition].ranges).toSeq
+    val first = stream.latestOffset(stream.initialOffset(), all)
+    assert(planned(stream.initialOffset(), first) == Seq(EnvelopeRange("n", 0, 0L, 0L, 1L, 2L)),
+      s"batch 0 must stop at the capture: $first")
+    // the live positions still show what arrived
+    assert(stream.reportLatestOffset().asInstanceOf[EnvelopeOffset].positions ==
+      Map(("n", 0) -> ((1L, 3L)), ("n", 1) -> ((1L, 1L))))
+    // the next batch of the same run plans nothing
+    val second = stream.latestOffset(first, all)
+    assert(planned(first, second).isEmpty, s"batch 1 read past the capture: $second")
+  }
+
+  test("AvailableNow: a checkpointed partition hidden for a whole run keeps its position") {
+    val inner = new InMemoryBroker
+    inner.add(raw("h", 0, 1, 0), raw("h", 0, 1, 1), raw("h", 1, 1, 0), raw("h", 1, 1, 1))
+    // a broker whose listing hides partition 1 for a whole run
+    var hide = false
+    val hiding = new EnvelopeBroker {
+      override def topicPartitions: Seq[(String, Int)] =
+        inner.topicPartitions.filterNot(tp => hide && tp == (("h", 1)))
+      override def read(topic: String, partition: Int,
+          from: (Long, Long), until: (Long, Long)): Iterator[RawMessage] =
+        inner.read(topic, partition, from, until)
+      override def latest(topic: String, partition: Int): (Long, Long) =
+        if (hide && partition == 1) (0L, 0L) else inner.latest(topic, partition)
+    }
+    EnvelopeBrokerRegistry.register("es-hidden", hiding)
+    val ckpt = tmpDir("es-hidden-ckpt")
+    // the session-wide AvailableNow wrapper must not reach this source:
+    // the wrapper's capture drops a partition the listing misses
+    val wrapper = "spark.sql.streaming.triggerAvailableNowWrapper.enabled"
+    spark.conf.set(wrapper, "true")
+    try {
+      assert(drain("es-hidden", ckpt).size == 4)
+      hide = true
+      inner.add(raw("h", 0, 1, 2))
+      assert(drain("es-hidden", ckpt) == Seq(("h", 0, 1L, 2L)))
+      // partition 1 is listed again: only its new message is read, none
+      // of its history (a capture that dropped it would replay from (0,0))
+      hide = false
+      inner.add(raw("h", 1, 1, 2))
+      assert(drain("es-hidden", ckpt) == Seq(("h", 1, 1L, 2L)))
+    } finally spark.conf.unset(wrapper)
+  }
+
+  test("AvailableNow: a run after a failed batch replays it, then reads what arrived since") {
+    val broker = new InMemoryBroker
+    EnvelopeBrokerRegistry.register("es-retry", broker)
+    broker.add(raw("r", 0, 1, 0), raw("r", 0, 1, 1))
+    val ckpt = tmpDir("es-retry-ckpt")
+    // batch 0 is logged, then its sink fails: the offset log holds it,
+    // the commit log does not
+    val failed = spark.readStream.format(fmt).option("broker", "es-retry").load()
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        sys.error("sink down"): Unit
+      }
+      .start()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](failed.awaitTermination())
+    broker.add(raw("r", 0, 1, 2))
+    // a single-batch run would replay batch 0 and stop
+    assert(drain("es-retry", ckpt).sorted ==
+      Seq(("r", 0, 1L, 0L), ("r", 0, 1L, 1L), ("r", 0, 1L, 2L)))
   }
 
   test("packing: at most one input partition per slot, each range whole, largest first onto the least loaded") {
@@ -243,7 +273,7 @@ class EnvelopeSourceSpec extends SparkSuiteBase {
       }
     }
     EnvelopeBrokerRegistry.register("counting-listing", counting)
-    val stream = new EnvelopeMicroBatchStream("counting-listing", None)
+    val stream = new EnvelopeMicroBatchStream("counting-listing")
     val end = stream.latestOffset(stream.initialOffset(),
       org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
     val reported = stream.reportLatestOffset()

@@ -26,7 +26,6 @@ import graft.streaming.RawMessage
   *   response = TOPICS: int32 n, then n x (UTF topic-b64, int32 part)
   *              READ:   frames until an int32 -1 sentinel
   *              LATEST: int64 ledger, int64 entry
-  *              ADVANCE: int64 ledger, int64 entry, int64 skipped
   *              APPEND: UTF "OK"
   *
   * Server errors close the connection (the client surfaces
@@ -104,11 +103,6 @@ object SocketBroker {
           case "LATEST" =>
             val (l, e) = backend.latest(dec(parts(1)), parts(2).toInt)
             out.writeLong(l); out.writeLong(e)
-          case "ADVANCE" =>
-            val ((l, e), n) = backend.advance(dec(parts(1)),
-              parts(2).toInt, (parts(3).toLong, parts(4).toLong),
-              (parts(5).toLong, parts(6).toLong), parts(7).toLong)
-            out.writeLong(l); out.writeLong(e); out.writeLong(n)
           case "APPEND" =>
             val len = in.readInt()
             val bytes = new Array[Byte](len)
@@ -255,18 +249,6 @@ object SocketBroker {
       try {
         out.writeUTF(s"LATEST ${enc(topic)} $partition"); out.flush()
         (in.readLong(), in.readLong())
-      } finally sock.close()
-    }
-
-    override def advance(topic: String, partition: Int,
-        from: (Long, Long), until: (Long, Long),
-        n: Long): ((Long, Long), Long) = {
-      val (sock, in, out) = connect()
-      try {
-        out.writeUTF(s"ADVANCE ${enc(topic)} $partition " +
-          s"${from._1} ${from._2} ${until._1} ${until._2} $n")
-        out.flush()
-        ((in.readLong(), in.readLong()), in.readLong())
       } finally sock.close()
     }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.{DestinationSink, MessageMirror, PulsarMessage, RawMessage}
 
-/** The socket transport must pass the identical 7-clause contract the
+/** The socket transport must pass the identical 6-clause contract the
   * in-memory and file brokers pass — every guarantee now crossing a
   * real TCP boundary with real frame serialization. Plus the two
   * things only a transport can get wrong: failure surfacing (dead

@@ -193,8 +193,7 @@ class ReplicationSpec extends SparkSuiteBase {
     // cache + evicted sparse map)
     assert(dst(OffsetIndex.translateTwoTier(stats, om)).isEmpty)
     // wide retention: the dense tier hits exactly
-    assert(dst(OffsetIndex.translateTwoTier(stats, om,
-      retentionMinutes = 1000000, denseRetentionMinutes = 1000000))
+    assert(dst(OffsetIndex.translateTwoTier(stats, om, retentionMinutes = 1000000))
       .contains(110L))
   }
 

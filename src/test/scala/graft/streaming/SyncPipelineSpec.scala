@@ -447,9 +447,6 @@ class SyncPipelineSpec extends SparkSuiteBase {
 
   test("lag report: backlog and frontiers per partition, null frontier before delivery") {
     import spark.implicits._
-    val src0 = new FakeSource(spark)
-    val dst0 = new FakeDest(spark, "lag-dst")
-    val pipe = new SyncPipeline(spark, src0, dst0)
     def raw(t: String, p: Int, l: Long, e: Long) =
       RawMessage("acme", "prod", t, p, l, e, Array[Byte](1), null, 0L,
         1700000000000L, Map.empty)
@@ -463,7 +460,7 @@ class SyncPipelineSpec extends SparkSuiteBase {
     val offsetMap = Seq(
       om("tp", 0, 1, 0), om("tp", 0, 1, 1), // 2 of 3 delivered
       om("tp", 1, 5, 0)).toDF()             // 1 of 2 delivered
-    val got = pipe.lagReport(srcBatch, offsetMap)
+    val got = SyncPipeline.lagReport(srcBatch, offsetMap)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
     val tp0 = got(("tp", 0))
     assert(tp0.getLong(2) === 3L && tp0.getLong(3) === 2L
@@ -483,7 +480,7 @@ class SyncPipelineSpec extends SparkSuiteBase {
     // backlog)
     val collide = srcBatch.unionByName(
       Seq(raw("tp", 0, 7, 0).copy(namespace = "dev")).toDF())
-    val c = pipe.lagReport(collide, offsetMap)
+    val c = SyncPipeline.lagReport(collide, offsetMap)
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
     assert(c(("tp", 0)).getLong(2) === 4L && c(("tp", 0)).getLong(4) === 2L)
     assert(c.size === 3, "one row per (topic, partition)")
