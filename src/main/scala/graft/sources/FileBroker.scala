@@ -39,7 +39,8 @@ private[sources] object RawMessageCodec {
 
 /** Durable file-backed transport: one file per message under
   * `root/<topic-b64url>__<partition>/<ledgerId>-<entryId>`, written
-  * atomically (temp file + non-replacing move). The SECOND
+  * atomically (temp file + non-replacing link), the temp file taken
+  * from the root's [[FilePool]]. The SECOND
   * [[EnvelopeBroker]] implementation — it exists to prove the
   * [[EnvelopeBrokerTCK]] contract is implementation-agnostic (the
   * drop-in path a live Pulsar binding follows), and to give the
@@ -61,22 +62,62 @@ private[sources] object RawMessageCodec {
   * creates follow [[DurableFiles]].
   */
 class FileBroker(rootDir: String) extends EnvelopeBroker with WritableEnvelopeBroker {
-  import DurableFiles.{dec, enc, listNames}
+  import DurableFiles.{dec, enc, ensureDir, link, listNames}
 
   private val root: Path = {
     val p = Paths.get(rootDir)
     Files.createDirectories(p)
     p
   }
+  private val pool = DurableFiles.pool(root)
 
   private def partDir(topic: String, partition: Int): Path =
     root.resolve(s"${enc(topic)}__$partition")
 
-  override def append(m: RawMessage): Unit = {
-    val dir = partDir(m.topic, m.partition)
-    Files.createDirectories(dir)
-    DurableFiles.createFile(dir, s"${m.ledgerId}-${m.entryId}",
-      RawMessageCodec.serialize(m))
+  override def append(m: RawMessage): Unit =
+    DurableFiles.createFile(pool, ensureDir(partDir(m.topic, m.partition)),
+      s"${m.ledgerId}-${m.entryId}", RawMessageCodec.serialize(m))
+
+  /** Appends `m` and names the same file `claim` too: one inode, one
+    * write of the message bytes. `claim` lies in another directory of
+    * this root's filesystem, and its directory must exist. The claim
+    * is linked first, without replacing, so of racing or replayed
+    * calls with one `claim` the first wins; the message name second.
+    *
+    * Returns the position the claim holds: `m`'s when this call made
+    * the claim. When the claim existed already, `m`'s position is
+    * ignored: the claim's is returned, and its message is linked from
+    * the claim if it is missing (a writer that died between the two
+    * links). A claim made before claims held the message is two lines,
+    * `ledgerId\nentryId`; its message is appended from `m`'s fields at
+    * that position.
+    */
+  def appendClaimed(m: RawMessage, claim: Path): (Long, Long) = {
+    val dir = ensureDir(partDir(m.topic, m.partition))
+    def named(l: Long, e: Long): Path = dir.resolve(s"$l-$e")
+    val claimed = !Files.exists(claim) && {
+      val tmp = pool.take(dir)
+      try {
+        Files.write(tmp, RawMessageCodec.serialize(m))
+        link(tmp, claim) && { link(tmp, named(m.ledgerId, m.entryId)); true }
+      } finally Files.deleteIfExists(tmp)
+    }
+    if (claimed) (m.ledgerId, m.entryId)
+    else {
+      val bytes = Files.readAllBytes(claim)
+      val f = new String(bytes, UTF_8).split("\n", -1)
+      if (f.length == 2) {
+        val (l, e) = (f(0).toLong, f(1).toLong)
+        append(m.copy(ledgerId = l, entryId = e))
+        (l, e)
+      } else {
+        // the claim is the message, and holds its position
+        val c = RawMessageCodec.deserialize(bytes)
+        val (l, e) = (c.ledgerId, c.entryId)
+        if (!Files.exists(named(l, e))) link(claim, named(l, e))
+        (l, e)
+      }
+    }
   }
 
   // Foreign directories under the root (tooling leftovers, editors) must

@@ -1,12 +1,13 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{EnvelopeBrokerRegistry, FileBroker}
-import graft.sources.DurableFiles.{createFile, dec, decProps, enc, encProps, listNames}
+import graft.sources.{DurableFiles, EnvelopeBrokerRegistry, FileBroker}
+import graft.sources.DurableFiles.{dec, decProps, enc, encProps, ensureDir, listNames,
+  replaceFile}
 
 /** Durable file-backed cluster — the deployable offline backend for
   * [[graft.SyncMain]], playing BOTH roles of the reference's two
@@ -25,14 +26,29 @@ import graft.sources.DurableFiles.{createFile, dec, decProps, enc, encProps, lis
   *   active-cursors/<same key>                  presence = live consumer
   *   dst-cursors/<same key>                     applied action\nledger\nentry
   *   messages/                                  [[FileBroker]] root
-  *   assignments/<b64(topic)>__<part>/<l>-<e>   dstLedger\ndstEntry
+  *   assignments/<b64(topic)>__<part>/<l>-<e>   the dst message: same inode
+  *   offsetmap/<b64(topic)>__<part>/log         [[FileOffsetRecorder]] records
+  *   .pool/, messages/.pool/                    empty files made ahead
   * }}}
+  *
+  * A mirrored message is one inode with two names: its claim under
+  * `assignments/` (keyed by the src id) and its dst broker message
+  * under `messages/` (keyed by the dst id); see [[FileClusterSink]].
+  * Roots written before claims held the message have two-line
+  * `dstLedger\ndstEntry` assignment files and one offset-map file per
+  * src id (`offsetmap/<b64(topic)>__<part>/<l>-<e>`,
+  * `dstLedger\ndstEntry\nrecordedMs`); both still read back.
   *
   * Every create is ATOMIC and NON-REPLACING
   * ([[graft.sources.DurableFiles.createFile]]) — conflict-as-success,
   * the reference's swallowed `ConflictException`
   * (`PulsarTenantSyncManager.java:79`) — so
-  * re-ticks, concurrent tickers, and replayed epochs are all no-ops.
+  * re-ticks, concurrent tickers, and replayed epochs are all no-ops;
+  * its temp file comes from the root's
+  * [[graft.sources.FilePool]] (`.pool/`, which no listing sees).
+  * Cursor files are the exception: a cursor moves, so its file is
+  * replaced atomically, last writer wins
+  * ([[graft.sources.DurableFiles.replaceFile]]).
   * Metadata listings are driver-side directory scans (metadata-sized
   * by contract, guarded by `SyncConfig.maxMetadataRows` downstream);
   * the data plane goes through the `pulsar-envelope` DSv2 source over
@@ -59,14 +75,14 @@ class FileCluster(
     * (`PulsarPartitionSyncWorker.java:111`).
     */
   override val brokerName: String = s"file:$root/messages"
+  private val pool = DurableFiles.pool(root)
   EnvelopeBrokerRegistry.register(brokerName,
     new FileBroker(root.resolve("messages").toString))
 
-  private def dir(name: String): Path = {
-    val d = root.resolve(name)
-    Files.createDirectories(d)
-    d
-  }
+  private def dir(name: String): Path = ensureDir(root.resolve(name))
+
+  private def createFile(d: Path, name: String, body: => Array[Byte]): Boolean =
+    DurableFiles.createFile(pool, d, name, body)
 
   // ---- SourceCluster ----
 
@@ -145,12 +161,10 @@ class FileCluster(
     // cursor state REPLACES (a reset moves the position) — the one
     // deliberately non-idempotent-by-creation write; last action wins,
     // exactly the reference's resetCursor semantics
-    val f = dir("dst-cursors").resolve(
-      s"${enc(action.topic)}__${action.partition}__${enc(action.cursor)}")
-    Files.write(f,
+    replaceFile(dir("dst-cursors"),
+      s"${enc(action.topic)}__${action.partition}__${enc(action.cursor)}",
       s"${action.action}\n${action.dstLedger.getOrElse(-1L)}\n${action.dstEntry.getOrElse(-1L)}"
         .getBytes(UTF_8))
-    ()
   }
 
   // ---- seeding helpers (tests / demo topologies) ----
@@ -161,14 +175,11 @@ class FileCluster(
     msgs.foreach(b.append)
   }
 
-  def observeCursor(stat: CursorStat): Unit = {
-    val f = dir("cursors").resolve(
-      s"${enc(stat.topic)}__${stat.partition}__${enc(stat.cursor)}")
-    Files.write(f,
+  def observeCursor(stat: CursorStat): Unit =
+    replaceFile(dir("cursors"),
+      s"${enc(stat.topic)}__${stat.partition}__${enc(stat.cursor)}",
       s"${stat.readLedger}\n${stat.readEntry}\n${stat.observedTs.getTime}"
         .getBytes(UTF_8))
-    ()
-  }
 
   /** Applied dst-cursor positions, for inspection. */
   def dstCursors: Map[(String, Int, String), (String, Long, Long)] =
@@ -196,6 +207,9 @@ object FileCluster {
   private def splitCsv(s: String): Seq[String] =
     if (s.isEmpty) Seq.empty else s.split(",", -1).toSeq
 
+  /** The name of a partition's offset-map log in [[FileOffsetRecorder]]. */
+  private[streaming] val OffsetLog = "log"
+
   /** (fileName, body) pairs of [[listNames]]. */
   private[streaming] def listFiles(d: Path): Seq[(String, String)] =
     listNames(d).map(n => n -> new String(Files.readAllBytes(d.resolve(n)), UTF_8))
@@ -203,103 +217,108 @@ object FileCluster {
 
 /** Executor-side publisher into a [[FileCluster]]'s broker. MessageId
   * idempotence (the [[DestinationSink]] contract) is carried by the
-  * assignment file: the FIRST publish of a src MessageId atomically
-  * creates `assignments/<topic>__<part>/<srcLedger>-<srcEntry>` with
-  * the dst position it claimed; every replay reads the committed
-  * assignment back and re-appends idempotently at the SAME dst id
-  * (the broker append is itself a non-replacing create). Valid under
+  * claim: the FIRST publish of a src MessageId writes the dst message
+  * once and links it, without replacing, as
+  * `assignments/<topic>__<part>/<srcLedger>-<srcEntry>` and then as
+  * the broker message at the dst position it claimed
+  * ([[FileBroker.appendClaimed]]), so a delivered message is one
+  * inode. Every replay reads the committed claim back and re-links its
+  * message at the SAME dst id if it is missing. Valid under
   * local[*] — executors share the filesystem, like the broker
   * registry itself; a multi-host deployment swaps in a live transport
   * binding (see EnvelopeSource's TCK contract).
   *
   * The next dst entry of a partition is the count of its committed
-  * assignments. An instance lists a partition's assignments once, on
-  * its first publish there, and then counts up, so a publish costs
-  * O(1) files touched, not O(history). The mirror publishes each
+  * claims. An instance lists a partition's claims once, on its first
+  * publish there, and then counts up, so a publish costs O(1) files
+  * touched, not O(history). The mirror publishes each
   * (topic, partition) serially from one task, and every task
   * deserializes its own instance. Two attempts of one task can still
   * run at once (a speculative copy, or a killed task still running
   * when the query restarts); they publish the same messages in the
-  * same order, and a create that finds the entry already assigned
+  * same order, and a claim that finds the entry already claimed
   * moves the counter past the winner's dst entry, so the two stay in
   * step. Writers of different messages to one partition at once (a
   * zombie task of an earlier batch overlapping the next one) can
-  * still assign one dst entry twice: count-then-create is not atomic.
+  * still claim one dst entry twice: count-then-create is not atomic.
   */
 case class FileClusterSink(rootDir: String) extends DestinationSink {
-  import FileCluster._
 
   @transient private lazy val root = Paths.get(rootDir)
   @transient private lazy val broker = new FileBroker(
     root.resolve("messages").toString)
-  // (topic, partition) → (assignment dir, next dst entry)
+  // (topic, partition) → (claim dir, next dst entry)
   @transient private lazy val next =
     scala.collection.mutable.HashMap.empty[(String, Int), (Path, Long)]
 
   override def publish(msg: PulsarMessage): (Long, Long) = {
-    val (aDir, n) = next.getOrElseUpdate((msg.topic, msg.partition), {
-      val d = root.resolve("assignments")
-        .resolve(s"${enc(msg.topic)}__${msg.partition}")
-      Files.createDirectories(d)
+    val key = (msg.topic, msg.partition)
+    val (cDir, n) = next.getOrElseUpdate(key, {
+      val d = ensureDir(root.resolve("assignments")
+        .resolve(s"${enc(msg.topic)}__${msg.partition}"))
       (d, listNames(d).size.toLong)
     })
-    val name = s"${msg.ledgerId}-${msg.entryId}"
-    val assigned: (Long, Long) =
-      if (createFile(aDir, name, s"${1000L + msg.partition}\n$n".getBytes(UTF_8))) {
-        next((msg.topic, msg.partition)) = (aDir, n + 1)
-        (1000L + msg.partition, n)
-      } else {
-        // a replay, or a lost race: the winner's assignment, and a
-        // racing attempt ahead of this one moves the counter on
-        val won = readAssignment(aDir.resolve(name))
-        next((msg.topic, msg.partition)) = (aDir, math.max(n, won._2 + 1))
-        won
-      }
-    broker.append(RawMessage(
+    val assigned = broker.appendClaimed(RawMessage(
       msg.tenant, msg.namespace, msg.topic, msg.partition,
-      assigned._1, assigned._2, msg.value, msg.key.orNull,
+      1000L + msg.partition, n, msg.value, msg.key.orNull,
       msg.eventTime.map(_.getTime).getOrElse(0L),
-      msg.publishTime.getTime, msg.properties))
+      msg.publishTime.getTime, msg.properties),
+      cDir.resolve(s"${msg.ledgerId}-${msg.entryId}"))
+    // a replay, or a lost race, returns the winner's claim; a racing
+    // attempt ahead of this one moves the counter on
+    next(key) = (cDir, math.max(n, assigned._2 + 1))
     assigned
-  }
-
-  private def readAssignment(f: Path): (Long, Long) = {
-    val lines = new String(Files.readAllBytes(f), UTF_8).split("\n", -1)
-    (lines(0).toLong, lines(1).toLong)
   }
 }
 
-/** Durable offset-map recorder: one file per src MessageId (A15/A16),
-  * first record wins — replayed epochs re-record the same mapping
-  * harmlessly. `toDF` feeds [[OffsetIndex.translateTwoTier]] each
-  * cursor tick.
+/** Durable offset-map recorder (A15/A16): one append-only log per
+  * (topic, partition), `offsetmap/<b64(topic)>__<part>/log`. A record
+  * is one `write` with `O_APPEND`, of
+  * `\n<srcLedger> <srcEntry> <dstLedger> <dstEntry> <recordedMs> .`:
+  * the leading newline starts it on a line of its own even after a
+  * torn write, and the closing `.` marks it whole, so a torn record
+  * costs only itself. The first record of a src id wins — replayed
+  * epochs append the same mapping again, harmlessly. A root written
+  * before the log keeps one file per src id in the same directory
+  * (`<srcLedger>-<srcEntry>`, `dstLedger\ndstEntry\nrecordedMs`);
+  * those read back first. `toDF` feeds
+  * [[OffsetIndex.translateTwoTier]] each cursor tick.
   */
 case class FileOffsetRecorder(rootDir: String) extends OffsetRecorder {
   import FileCluster._
 
-  @transient private lazy val dir = {
-    val d = Paths.get(rootDir)
-    Files.createDirectories(d)
-    d
-  }
+  @transient private lazy val dir = ensureDir(Paths.get(rootDir))
 
-  override def record(m: OffsetMapping): Unit = {
-    val pDir = dir.resolve(s"${enc(m.topic)}__${m.partition}")
-    Files.createDirectories(pDir)
-    createFile(pDir, s"${m.srcLedger}-${m.srcEntry}",
-      s"${m.dstLedger}\n${m.dstEntry}\n${m.recordedTs.getTime}".getBytes(UTF_8))
-  }
+  override def record(m: OffsetMapping): Unit =
+    Files.write(
+      ensureDir(dir.resolve(s"${enc(m.topic)}__${m.partition}")).resolve(OffsetLog),
+      s"\n${m.srcLedger} ${m.srcEntry} ${m.dstLedger} ${m.dstEntry} ${m.recordedTs.getTime} ."
+        .getBytes(UTF_8),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
 
   def mappings: Seq[OffsetMapping] =
     listNames(dir).map(dir.resolve).filter(Files.isDirectory(_)).flatMap { pd =>
-      val Array(topic, part) = pd.getFileName.toString.split("__", 2)
-      listFiles(pd).map { case (name, body) =>
+      val Array(t, part) = pd.getFileName.toString.split("__", 2)
+      val (topic, p) = (dec(t), part.toInt)
+      val (logs, files) = listFiles(pd).partition(_._1 == OffsetLog)
+      val perFile = files.map { case (name, body) =>
         val Array(l, e) = name.split("-", 2)
         val lines = body.split("\n", -1)
-        OffsetMapping(dec(topic), part.toInt, l.toLong, e.toLong,
+        OffsetMapping(topic, p, l.toLong, e.toLong,
           lines(0).toLong, lines(1).toLong,
           new java.sql.Timestamp(lines(2).toLong))
       }
+      val logged = logs.flatMap(_._2.split("\n").iterator.flatMap { line =>
+        line.split(" ") match {
+          case Array(sl, se, dl, de, ms, ".") =>
+            Some(OffsetMapping(topic, p, sl.toLong, se.toLong,
+              dl.toLong, de.toLong, new java.sql.Timestamp(ms.toLong)))
+          case _ => None // torn
+        }
+      })
+      val first = scala.collection.mutable.HashMap.empty[(Long, Long), OffsetMapping]
+      (perFile ++ logged).foreach(m => first.getOrElseUpdate((m.srcLedger, m.srcEntry), m))
+      first.values
     }.sortBy(m => (m.topic, m.partition, m.srcLedger, m.srcEntry))
 
   def toDF(spark: SparkSession): DataFrame =

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
@@ -10,6 +12,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.{SparkEntry, SparkSuiteBase}
+import graft.sources.DurableFiles.enc
+import graft.sources.FileBroker
 
 /** How the mirror lays out a micro-batch: each source partition is
   * published in the task that reads it (no shuffle, one job per
@@ -218,6 +222,95 @@ class MirrorLayoutSpec extends SparkSuiteBase {
       .map { case (tp, ms) => tp -> ms.map(m => new String(m.value, "UTF-8")) })
     assert(rec.mappings.size == 15)
     assertRankOrder(rec.mappings)
+  }
+
+  /** The regular files under `root`, outside the file pools, by inode. */
+  private def inodes(root: Path): Map[AnyRef, Seq[Path]] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        !root.relativize(p).iterator().asScala.exists(_.toString == ".pool"))
+      .toSeq.groupBy(p => Files.getAttribute(p, "unix:ino"))
+    finally s.close()
+  }
+
+  test("a FileBroker-fed mirror makes one inode per message: the claim is the message, the offset map one log per partition") {
+    val src = new FileCluster(spark, tmpDir("ml-ino-src"), "src")
+    val dstRoot = Paths.get(tmpDir("ml-ino-dst"))
+    val dst = new FileCluster(spark, dstRoot.toString, "dst")
+    val rec = FileOffsetRecorder(s"$dstRoot/offsetmap")
+    val parts = Seq(("i", 0), ("i", 1), ("j", 0))
+    src.addMessages((for ((t, p) <- parts; e <- 0L until 7L) yield msg(t, p, 2L, e)): _*)
+    val n = parts.size * 7
+    assert(inodes(dstRoot).isEmpty)
+    MessageMirror.start(spark, src.brokerName, dst.sink, tmpDir("ml-ino-ckpt"),
+      Trigger.AvailableNow(), offsets = Some(rec)).start().awaitTermination()
+
+    val mapped = rec.mappings
+    assert(mapped.size == n)
+    val byInode = inodes(dstRoot)
+    // n inodes for n messages, each named twice; then the logs
+    assert(byInode.size == n + parts.size, s"${byInode.size} inodes for $n messages")
+    val logs = byInode.values.flatten.filter(_.startsWith(dstRoot.resolve("offsetmap")))
+    assert(logs.size == parts.size, s"offset map files: $logs")
+    mapped.foreach { m =>
+      val claim = dstRoot.resolve(s"assignments/${enc(m.topic)}__${m.partition}/${m.srcLedger}-${m.srcEntry}")
+      val message = dstRoot.resolve(s"messages/${enc(m.topic)}__${m.partition}/${m.dstLedger}-${m.dstEntry}")
+      assert(Files.getAttribute(claim, "unix:ino") == Files.getAttribute(message, "unix:ino"))
+      assert(Files.getAttribute(message, "unix:nlink") == 2)
+    }
+    assertRankOrder(mapped)
+  }
+
+  test("a root in the per-file layout restarts: nothing delivered twice, old and new offset records read together, a torn log line costs one record") {
+    val src = new FileCluster(spark, tmpDir("ml-old-src"), "src")
+    val dstRoot = Paths.get(tmpDir("ml-old-dst"))
+    val dst = new FileCluster(spark, dstRoot.toString, "dst")
+    val rec = FileOffsetRecorder(s"$dstRoot/offsetmap")
+    val msgs = (0L until 6L).map(e => msg("o", 0, 1L, e))
+    src.addMessages(msgs: _*)
+    // the earlier layout, by hand: src (1, 0..2) mirrored and mapped one
+    // file each; (1, 3) claimed by a writer that died before appending
+    val claims = Files.createDirectories(dstRoot.resolve(s"assignments/${enc("o")}__0"))
+    val perFile = Files.createDirectories(dstRoot.resolve(s"offsetmap/${enc("o")}__0"))
+    val broker = new FileBroker(dstRoot.resolve("messages").toString)
+    msgs.take(4).zipWithIndex.foreach { case (m, i) =>
+      Files.write(claims.resolve(s"1-$i"), s"1000\n$i".getBytes(UTF_8))
+      if (i < 3) {
+        broker.append(m.copy(ledgerId = 1000L, entryId = i.toLong))
+        Files.write(perFile.resolve(s"1-$i"), s"1000\n$i\n${m.publishTimeMillis}".getBytes(UTF_8))
+      }
+    }
+    val oldClaims = (0 until 4).map(i => Files.readAllBytes(claims.resolve(s"1-$i")).toSeq)
+
+    def mirror(): Unit = MessageMirror.start(spark, src.brokerName, dst.sink,
+      tmpDir("ml-old-ckpt"), Trigger.AvailableNow(), offsets = Some(rec))
+      .start().awaitTermination()
+    mirror()
+    mirror() // a full replay changes nothing either
+
+    val expected = msgs.zipWithIndex.map { case (m, i) =>
+      OffsetMapping("o", 0, 1L, i.toLong, 1000L, i.toLong,
+        new java.sql.Timestamp(m.publishTimeMillis))
+    }
+    assert(dst.mirroredMessages.map(m => (m.entryId, new String(m.value, UTF_8))) ==
+      msgs.zipWithIndex.map { case (m, i) => (i.toLong, new String(m.value, UTF_8)) })
+    assert(Files.list(claims).count() == 6)
+    assert((0 until 4).map(i => Files.readAllBytes(claims.resolve(s"1-$i")).toSeq) == oldClaims)
+    assert(rec.mappings == expected)
+
+    // tear a log's last record: only that record is lost, and a record
+    // appended after the torn one reads back
+    val q = (0L until 3L).map(e =>
+      OffsetMapping("q", 0, 1L, e, 1000L, e, new java.sql.Timestamp(e)))
+    q.foreach(rec.record)
+    val log = dstRoot.resolve(s"offsetmap/${enc("q")}__0/log")
+    Files.write(log, Files.readAllBytes(log).dropRight(3))
+    assert(rec.mappings.filter(_.topic == "q") == q.take(2))
+    val later = OffsetMapping("q", 0, 1L, 3L, 1000L, 3L, new java.sql.Timestamp(3L))
+    rec.record(later)
+    assert(rec.mappings.filter(_.topic == "q") == q.take(2) :+ later)
+    assert(rec.mappings.filter(_.topic == "o") == expected)
   }
 
   test("q271 runs the deployed mirror path: no shuffle, one job per micro-batch") {
